@@ -13,39 +13,35 @@ import org.apache.spark.sql.functions._
   *     bucketing / sort-within-partitions in the written parquet, recorded
   *     as metadata (and applicable via [[applyLayout]]).
   *   - E2 FK migration's semantic payload is the referential-integrity
-  *     check itself: a left-anti join counting orphans. At 100 TB this is
-  *     a shuffle-or-broadcast join Catalyst plans like any other; for
-  *     dimension parents (nation, region) it broadcasts.
+  *     check itself: child rows whose key finds no distinct parent key,
+  *     counted per edge ([[fkOrphansFused]], one scan per child table).
+  *     At 100 TB this is a shuffle-or-broadcast join Catalyst plans like
+  *     any other; for dimension parents (nation, region) it broadcasts.
   */
 object Constraints {
 
   /** Orphan rows in child whose key has no match in parent (0 = FK holds).
     * NULL child keys are NOT orphans — SQL FK constraints accept NULL
     * (match is simply not enforced for them), so counting them would
-    * flag every legitimately-nullable FK column as violated.
+    * flag every legitimately-nullable FK column as violated. The
+    * one-edge call of [[fkOrphansFused]], so every caller shares one
+    * orphan definition.
     */
   def fkOrphanCount(
       child: DataFrame, childCol: String,
       parent: DataFrame, parentCol: String): Long =
-    child
-      .filter(col(childCol).isNotNull)
-      .join(parent.select(col(parentCol).as("__fk_parent_key")).distinct(),
-        child(childCol) === col("__fk_parent_key"), "left_anti")
-      .count()
+    fkOrphans("edge", child, childCol, parent, parentCol).head().getLong(1)
 
-  /** Distributed variant returning a one-row DataFrame (composable into a
-    * union of edge checks without driver round-trips).
+  /** One-row (fk_edge, orphan_count) DataFrame for one edge —
+    * [[fkOrphansFused]] with a single edge, composable into a union of
+    * edge checks without driver round-trips.
     */
   def fkOrphans(
       label: String,
       child: DataFrame, childCol: String,
       parent: DataFrame, parentCol: String): DataFrame =
-    child
-      .filter(col(childCol).isNotNull)
-      .join(parent.select(col(parentCol).as("__fk_parent_key")).distinct(),
-        child(childCol) === col("__fk_parent_key"), "left_anti")
-      .agg(count(lit(1)).as("orphan_count"))
-      .select(lit(label).as("fk_edge"), col("orphan_count"))
+    fkOrphansFused(child,
+      Seq(FkEdge(label, childCol, parent, parentCol, broadcastParent = false)))
 
   /** One FK edge of a fact table, for [[fkOrphansFused]]. `broadcastParent`
     * marks genuine dimension parents (bounded size at any scale factor);

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -18,9 +19,14 @@ import scala.concurrent.duration.Duration
   *     table into RAM — its known scalability ceiling); everything stays
   *     partitioned on executors
   *   - staging is columnar parquet, not /tmp CSV; constraint phase becomes
-  *     validation (anti-join orphan counts) since Spark has no FK DDL
+  *     validation (orphan counts) since Spark has no FK DDL
   *   - deferred-constraint ordering (E3) is preserved: all writes finish
-  *     before any FK validation runs.
+  *     before any FK validation runs; validation is then ONE action —
+  *     every edge of a child table in one fused scan, all child tables
+  *     unioned
+  *   - the takedown's family deletes overlap ([[deleteDocs]]), while the
+  *     re-levels stay sequential ([[relevelArtifacts]]: their partial
+  *     paths flip a session-global conf)
   */
 object Pipeline {
 
@@ -185,7 +191,19 @@ object Pipeline {
       cfg: SourceConfig,
       table: String,
       outDir: String,
-      log: MigrationLog = MigrationLog.silent): TableResult = {
+      log: MigrationLog = MigrationLog.silent): TableResult =
+    migrateWithSchema(spark, cfg, table, outDir, log)._1
+
+  /** [[migrateTable]] plus the schema it wrote (None when skipped), so
+    * the FK phase reads the written files without a parquet
+    * schema-inference job per read.
+    */
+  private def migrateWithSchema(
+      spark: SparkSession,
+      cfg: SourceConfig,
+      table: String,
+      outDir: String,
+      log: MigrationLog): (TableResult, Option[StructType]) = {
     val t0 = System.nanoTime()
     val outName = cfg.tableRenames.getOrElse(table, table)
     log.info(table, "migrate", s"start -> $outName")
@@ -194,8 +212,8 @@ object Pipeline {
 
     if (cfg.skipTableIfEmpty && prof.rowCount == 0L) {
       log.info(table, "migrate", "skipped: empty table (B9)")
-      return TableResult(table, outName, 0L, 0L, Nil, Nil, skipped = true,
-        (System.nanoTime() - t0) / 1e9)
+      return (TableResult(table, outName, 0L, 0L, Nil, Nil, skipped = true,
+        (System.nanoTime() - t0) / 1e9), None)
     }
 
     val allNull =
@@ -219,8 +237,9 @@ object Pipeline {
       log.info(table, "migrate", s"dropped all-null cols: ${allNull.mkString(",")}")
     log.info(table, "migrate", s"done rows=${prof.rowCount}")
 
-    TableResult(table, outName, prof.rowCount, prof.rowCount,
-      allNull, conv, skipped = false, (System.nanoTime() - t0) / 1e9)
+    (TableResult(table, outName, prof.rowCount, prof.rowCount,
+      allNull, conv, skipped = false, (System.nanoTime() - t0) / 1e9),
+      Some(transformed.schema))
   }
 
   /** Build the configured artifacts from the WRITTEN tables (call after
@@ -656,6 +675,21 @@ object Pipeline {
     * affected tables, a separate storage-level operation; callers
     * doing a full takedown filter-and-rewrite the corpus first, then
     * call this for the nine serving artifacts.
+    *
+    * The families' verbs run concurrently
+    * ([[graft.ops.GovernanceQueries.parPhase]]): their tables are
+    * disjoint and no delete verb touches the session-global overwrite
+    * mode. A failing verb cancels the siblings still in their
+    * read-only counts; a sibling past its counts is never interrupted
+    * (its drops and rewrites run to completion) and one that reaches
+    * that point after the failure stops before writing. So each other
+    * family is left either untouched or fully deleted, as when the
+    * verbs ran one after another. The call waits for every verb's
+    * outcome, with no time limit, then rethrows the first failure.
+    * The report rows keep the order above. `docIds` (and `vecIds`)
+    * are materialized once into a driver-local id set that every verb
+    * joins. Every cataloged IVF index of the dir is taken down,
+    * whatever its cell count.
     */
   def deleteDocs(
       spark: SparkSession,
@@ -665,61 +699,64 @@ object Pipeline {
       vecIds: Option[org.apache.spark.sql.DataFrame] = None,
       log: MigrationLog = MigrationLog.silent): Seq[Report.ArtifactResult] = {
     import graft.ops._
-    val F = org.apache.spark.sql.functions
-    val vids = vecIds.getOrElse(
-      docIds.select(F.col("doc_id").as("vec_id")))
-    def timed[T](f: => T): (T, Double) = {
+    // one takedown id set per call: every verb joins the same
+    // driver-local relation, materialized once here
+    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
+    lazy val vids = BandIndex.takedownIds(spark,
+      vecIds.getOrElse(ids.withColumnRenamed("doc_id", "vec_id")), "vec_id")
+    // one verb per family that exists under this dir, in report order;
+    // a verb runs its family's delete, handing it the phase's write
+    // gate `w`, and returns the report row
+    def verb(table: String, kind: String)(detail: (() => Unit) => String)
+        : Seq[(() => Unit) => Report.ArtifactResult] = Seq { w =>
       val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def row(table: String, kind: String, detail: String, secs: Double) = {
-      log.info(table, s"delete $kind", detail)
-      Report.ArtifactResult(table, kind, detail, 0L, 0L, secs)
+      val d = detail(w)
+      val secs = (System.nanoTime() - t0) / 1e9
+      log.info(table, s"delete $kind", d)
+      Report.ArtifactResult(table, kind, d, 0L, 0L, secs)
     }
     val band = {
       val tag = BandIndex.tag(outDir, "full")
-      if (!BandIndex.exists(spark, tag)) Nil else {
-        val ((sh, bd), secs) = timed(BandIndex.delete(spark, docIds, tag))
-        Seq(row(tag, "delete_band_index",
-          s"tag=$tag shingle_rows_removed=$sh band_rows_removed=$bd " +
-            "bsz=stale_upper_bound_until_refreshBucketSizes", secs))
+      if (!BandIndex.exists(spark, tag)) Nil
+      else verb(tag, "delete_band_index") { w =>
+        val (sh, bd) = BandIndex.delete(spark, ids, tag, w)
+        s"tag=$tag shingle_rows_removed=$sh band_rows_removed=$bd " +
+          "bsz=stale_upper_bound_until_refreshBucketSizes"
       }
     }
     val spans = Seq(SpanSet.tag(outDir) -> "delete_span_set",
       SpanSet.charTag(outDir) -> "delete_char_span_set").flatMap {
       case (tag, kind) =>
-        if (!SpanSet.exists(spark, tag)) Nil else {
-          val ((rows, negs), secs) = timed(SpanSet.delete(spark, docIds, tag))
-          Seq(row(tag, kind,
-            s"tag=$tag span_rows_removed=$rows neg_delta_rows=$negs " +
-              "counts=exact_immediately", secs))
+        if (!SpanSet.exists(spark, tag)) Nil
+        else verb(tag, kind) { w =>
+          val (rows, negs) = SpanSet.delete(spark, ids, tag, w)
+          s"tag=$tag span_rows_removed=$rows neg_delta_rows=$negs " +
+            "counts=exact_immediately"
         }
     }
     val chunks = {
       val tag = ChunkStore.tag(outDir)
-      if (!ChunkStore.exists(spark, tag)) Nil else {
-        val (n, secs) = timed(ChunkStore.delete(spark, docIds, tag))
-        Seq(row(tag, "delete_chunk_store",
-          s"tag=$tag chunk_rows_removed=$n exact_immediately", secs))
+      if (!ChunkStore.exists(spark, tag)) Nil
+      else verb(tag, "delete_chunk_store") { w =>
+        s"tag=$tag chunk_rows_removed=${ChunkStore.delete(spark, ids, tag, w)} " +
+          "exact_immediately"
       }
     }
     val contain = {
       val tag = ContainIndex.tag(outDir, "cfull")
-      if (!ContainIndex.exists(spark, tag)) Nil else {
-        val ((ng, dc), secs) = timed(ContainIndex.delete(spark, docIds, tag))
-        Seq(row(tag, "delete_contain_index",
-          s"tag=$tag posting_rows_removed=$ng doc_rows_removed=$dc " +
-            "df_oc=stale_upper_bounds_until_refreshCounts", secs))
+      if (!ContainIndex.exists(spark, tag)) Nil
+      else verb(tag, "delete_contain_index") { w =>
+        val (ng, dc) = ContainIndex.delete(spark, ids, tag, w)
+        s"tag=$tag posting_rows_removed=$ng doc_rows_removed=$dc " +
+          "df_oc=stale_upper_bounds_until_refreshCounts"
       }
     }
     val lex = lexTables.flatMap { t =>
       val tag = LexIndex.tag(s"$outDir/$t")
-      if (!LexIndex.exists(spark, tag)) Nil else {
-        val (n, secs) = timed(LexIndex.delete(spark, docIds, tag))
-        Seq(row(tag, "delete_lex_index",
-          s"tag=$tag posting_rows_removed=$n stats=exact " +
-            "df=stale_upper_bound_until_refreshCountsPartial", secs))
+      if (!LexIndex.exists(spark, tag)) Nil
+      else verb(tag, "delete_lex_index") { w =>
+        s"tag=$tag posting_rows_removed=${LexIndex.delete(spark, ids, tag, w)} " +
+          "stats=exact df=stale_upper_bound_until_refreshCountsPartial"
       }
     }
     val media = Seq(
@@ -727,40 +764,42 @@ object Pipeline {
       (MediaSigStore.audioTag(outDir), "delete_audio_sigs"),
       (MediaSigStore.videoTag(outDir), "delete_video_sigs")).flatMap {
       case (tag, kind) =>
-        if (!MediaSigStore.exists(spark, tag)) Nil else {
-          val ((s, b), secs) = timed(MediaSigStore.delete(spark, docIds, tag))
-          Seq(row(tag, kind,
-            s"tag=$tag sig_rows_removed=$s band_rows_removed=$b " +
-              "bsz=stale_upper_bound_until_refreshBucketSizes", secs))
+        if (!MediaSigStore.exists(spark, tag)) Nil
+        else verb(tag, kind) { w =>
+          val (s, b) = MediaSigStore.delete(spark, ids, tag, w)
+          s"tag=$tag sig_rows_removed=$s band_rows_removed=$b " +
+            "bsz=stale_upper_bound_until_refreshBucketSizes"
         }
     }
-    val ivf = {
-      // the artifact phase's cell derivation: tag embeds the cell count
-      val embPath = s"$outDir/embeddings.parquet"
-      val fs = new org.apache.hadoop.fs.Path(embPath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(embPath))) Nil else {
-        val cells = SimilarityQueries.derivedCells(
-          spark.read.parquet(embPath).count())
-        val tag = IvfIndex.tag(outDir, cells)
-        if (!IvfIndex.exists(spark, tag)) Nil else {
-          val (n, secs) = timed(IvfIndex.delete(spark, vids, tag))
-          Seq(row(tag, "delete_ivf_index",
-            s"tag=$tag cell_rows_removed=$n " +
-              "centroids=stale_until_refreshCentroids", secs))
-        }
+    // the tag embeds the cell count: the catalog's table names give
+    // every IVF tag of this dir without counting the embeddings
+    val ivf = IvfIndex.catalogedTags(spark, outDir).flatMap { tag =>
+      if (!IvfIndex.exists(spark, tag)) Nil
+      else verb(tag, "delete_ivf_index") { w =>
+        s"tag=$tag cell_rows_removed=${IvfIndex.delete(spark, vids, tag, w)} " +
+          "centroids=stale_until_refreshCentroids"
       }
     }
     val pq = {
       val tag = PqStore.tag(outDir)
-      if (!PqStore.exists(spark, tag)) Nil else {
-        val (n, secs) = timed(PqStore.delete(spark, vids, tag))
-        Seq(row(tag, "delete_pq_store",
-          s"tag=$tag code_rows_removed=$n codebook=untouched_by_design",
-          secs))
+      if (!PqStore.exists(spark, tag)) Nil
+      else verb(tag, "delete_pq_store") { w =>
+        s"tag=$tag code_rows_removed=${PqStore.delete(spark, vids, tag, w)} " +
+          "codebook=untouched_by_design"
       }
     }
-    band ++ spans ++ chunks ++ contain ++ lex ++ media ++ ivf ++ pq
+    // the families' tables are disjoint and no delete verb flips the
+    // session-global overwrite mode (parPhase asserts it), so the verbs
+    // overlap; a failing verb cancels only the siblings still counting,
+    // and the wait has no time limit, so no write is ever interrupted
+    val verbs = band ++ spans ++ chunks ++ contain ++ lex ++ media ++ ivf ++ pq
+    if (verbs.isEmpty) Nil else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(verbs.size)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try GovernanceQueries.parPhase(spark,
+        s"delete-docs-${java.util.UUID.randomUUID()}", verbs, Duration.Inf)
+      finally pool.shutdown()
+    }
   }
 
   /** Post-mutation re-level step for the stored LexIndexes — the
@@ -807,7 +846,10 @@ object Pipeline {
     * verbs): one policy decision + report row per existing stored
     * index under this dir, each family's own `relevel` applying the
     * shared measured threshold. Same separation as the lex-only form:
-    * run after mutations, never inside them.
+    * run after mutations, never inside them. The families re-level one
+    * after another, unlike [[deleteDocs]]: every partial path flips the
+    * session-global `spark.sql.sources.partitionOverwriteMode`
+    * (`BandIndex.overwritePartitionsDynamic`), so two cannot overlap.
     */
   def relevelArtifacts(
       spark: SparkSession,
@@ -859,12 +901,13 @@ object Pipeline {
 
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val results =
+    val migrated =
       try Await.result(
         Future.sequence(tables.map(t =>
-          Future(migrateTable(spark, cfg, t, outDir, log)))),
+          Future(migrateWithSchema(spark, cfg, t, outDir, log)))),
         Duration.Inf)
       finally pool.shutdown()
+    val results = migrated.map(_._1)
 
     // E3: constraints strictly after all loads. FK table names are
     // SOURCE names (the user declares edges against the schema they
@@ -873,26 +916,41 @@ object Pipeline {
     // outName mapping migrateTable used, and skip (loudly) any edge
     // whose table has no written file rather than crashing the whole
     // migration after every load succeeded.
-    val written = results.filterNot(_.skipped).map(_.outputName).toSet
-    val fkResults = foreignKeys.flatMap { fk =>
+    val schemas = migrated.collect { case (r, Some(schema)) =>
+      r.outputName -> schema }.toMap
+    val edges = foreignKeys.flatMap { fk =>
       val label =
         s"${fk.childTable}.${fk.childCol}->${fk.parentTable}.${fk.parentCol}"
       val (childOut, parentOut) =
         (cfg.tableRenames.getOrElse(fk.childTable, fk.childTable),
           cfg.tableRenames.getOrElse(fk.parentTable, fk.parentTable))
-      if (!written.contains(childOut) || !written.contains(parentOut)) {
+      if (!schemas.contains(childOut) || !schemas.contains(parentOut)) {
         log.warn(fk.childTable, s"fk $label",
           "skipped: table not written this run " +
-            s"(child=$childOut parent=$parentOut written=${written.size})")
+            s"(child=$childOut parent=$parentOut written=${schemas.size})")
         None
-      } else Some {
-        val orphans = log.timed(fk.childTable, s"fk $label") {
-          Constraints.fkOrphanCount(
-            spark.read.parquet(s"$outDir/$childOut.parquet"), fk.childCol,
-            spark.read.parquet(s"$outDir/$parentOut.parquet"), fk.parentCol)
-        }
-        Report.FkResult(label, orphans)
+      } else Some((fk, label, childOut, parentOut))
+    }
+    // Every edge in ONE action: one fused scan per child table
+    // (Constraints.fkOrphansFused), unioned, collected once. The
+    // written files are read with the schema this step wrote them
+    // with, so no read runs a schema-inference job.
+    def read(t: String) =
+      spark.read.schema(schemas(t)).parquet(s"$outDir/$t.parquet")
+    val orphans = if (edges.isEmpty) Map.empty[String, Long] else
+      log.timed("*", "fk *") {
+        edges.groupBy(_._3).toSeq.sortBy(_._1).map { case (child, es) =>
+          Constraints.fkOrphansFused(read(child), es.map {
+            case (fk, label, _, parentOut) =>
+              Constraints.FkEdge(label, fk.childCol, read(parentOut),
+                fk.parentCol, broadcastParent = false)
+          })
+        }.reduce(_ union _).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
       }
+    val fkResults = edges.map { case (fk, label, _, _) =>
+      log.info(fk.childTable, s"fk $label", s"orphans=${orphans(label)}")
+      Report.FkResult(label, orphans(label))
     }
     // E1's slot: artifacts build strictly after loads + validation.
     val artifactResults =

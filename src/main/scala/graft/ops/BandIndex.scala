@@ -141,6 +141,25 @@ object BandIndex {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .bucketSpec.map(_.numBuckets).getOrElse(0)
 
+  /** The takedown id set every family `delete` verb joins against —
+    * ONE definition instead of a `broadcast(ids.distinct())` per verb.
+    * The `key` values are collected once and deduplicated on the
+    * driver into a local relation, and that is what is broadcast: a
+    * plan-level distinct re-ran its shuffle and broadcast jobs at every
+    * use inside a verb (five uses in [[delete]] alone). Collecting a
+    * local relation — the set a `Pipeline.deleteDocs` call builds once
+    * and hands to every verb — runs no job, so every verb and every
+    * step inside a verb sees the same ids even when the caller's
+    * relation is nondeterministic. Same size assumption as the
+    * broadcast it replaces: a takedown batch is small.
+    */
+  private[graft] def takedownIds(spark: SparkSession, ids: DataFrame,
+                                 key: String): DataFrame = {
+    val keys = ids.select(col(key))
+    broadcast(spark.createDataFrame(
+      java.util.Arrays.asList(keys.collect().distinct: _*), keys.schema))
+  }
+
   /** Dynamic-partition overwrite of `staged` into `table` — the ONE
     * place the session-global `spark.sql.sources.partitionOverwriteMode`
     * is flipped (r17 ADVICE adjudicated): the advised per-writer
@@ -151,9 +170,12 @@ object BandIndex {
     * conf flip stays, but centralized here: the set/restore window is
     * the one write, every partial re-level shares this body, and the
     * documented constraint is single-writer-per-session during
-    * maintenance (the families' verbs are driver-sequenced everywhere
-    * in this repo). Refreshes the catalog entry after (cached file
-    * listings must not serve the pre-overwrite files).
+    * maintenance: re-levels run one after another
+    * (`Pipeline.relevelArtifacts`). Delete and build verbs never call
+    * this, so they may overlap across families (`Pipeline.deleteDocs`,
+    * q_takedown_audit); `GovernanceQueries.parPhase` asserts the conf
+    * is untouched at its barrier. Refreshes the catalog entry after
+    * (cached file listings must not serve the pre-overwrite files).
     */
   private[ops] def overwritePartitionsDynamic(spark: SparkSession,
                                               staged: DataFrame,
@@ -174,9 +196,9 @@ object BandIndex {
     * near-identical ~25-line bodies; LexIndex's df re-level is the same
     * shape) so the next stored family cannot fork the pattern:
     *
-    *   1. `touchedParts` — the ledger projected to the partition ints
-    *      its keys hash-confine to — is collected (bounded by the
-    *      table's partition count, itself bounded by derivedBuckets);
+    *   1. `parts` — the ledger projected to the partition ints its keys
+    *      hash-confine to ([[touchedPartitions]], bounded by the table's
+    *      partition count, itself bounded by derivedBuckets);
     *   2. ONE partition-pruned scan of exactly those partitions is
     *      re-staged by the family's `stage` (recompute the per-key
     *      level column via [[withKeyCount]]/withDf + re-stamp the
@@ -198,12 +220,10 @@ object BandIndex {
     * vintages) compose [[overwritePartitionsDynamic]] directly.
     */
   private[ops] def relevelPartitions(spark: SparkSession, table: String,
-                                     touchedParts: DataFrame,
+                                     parts: Seq[Int],
                                      partCol: String,
                                      stage: DataFrame => DataFrame,
                                      clear: () => Unit): Long = {
-    val parts = touchedParts.distinct().collect().map(_.getInt(0))
-      .sorted.toSeq
     if (parts.isEmpty) return 0L
     val staged = stage(spark.table(table)
         .filter(col(partCol).isin(parts: _*)))
@@ -213,41 +233,58 @@ object BandIndex {
     parts.size.toLong
   }
 
-  /** Touched-partition fraction for a family's ledger — the re-level
-    * POLICY input, hoisted next to [[relevelPartitions]] so the four
-    * mirrors share one definition: |distinct pmod(hash(ledger keys),
-    * nb)| / nb, where nb is the stored table's bucket count.
-    * Ledger-grain work (batch vocabulary), no stored-table scan.
+  /** The partitions a family's ledger touches: distinct
+    * pmod(hash(ledger keys), nb), sorted — collected (bounded by nb).
+    * Ledger-grain work (batch vocabulary), no stored-table scan. Empty
+    * when the ledger does not exist.
     */
-  private[ops] def touchedFractionOf(spark: SparkSession, ledger: String,
-                                     table: String,
-                                     hashCols: Seq[String]): Double = {
-    if (!spark.catalog.tableExists(ledger)) return 0.0
+  private[ops] def touchedPartitions(spark: SparkSession, ledger: String,
+                                     nb: Int,
+                                     hashCols: Seq[String]): Seq[Int] =
+    if (!spark.catalog.tableExists(ledger)) Nil
+    else spark.table(ledger)
+      .select(expr(s"pmod(hash(${hashCols.mkString(", ")}), $nb)").cast("int"))
+      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+
+  /** The re-level POLICY every family shares (the LexIndex.relevel
+    * shape — threshold measured on the pattern family,
+    * RELEVEL_r18.json): `partial` over the touched partitions below
+    * [[LexIndex.RelevelPartialMaxFraction]], `full` (returning the
+    * partitions it rewrote) at complete cover. The ledger is read ONCE:
+    * the touched-partition list gives the fraction by its size and is
+    * what the partial path rewrites. A missing ledger touches nothing
+    * (0.0); an unbucketed table counts as fully touched (1.0). Callers
+    * re-level one family after another, never concurrently: the
+    * partial path flips a session-global conf
+    * ([[overwritePartitionsDynamic]]). Returns (path, touched fraction,
+    * partitions rewritten).
+    */
+  private[ops] def relevelBy(spark: SparkSession, ledger: String,
+                             table: String, hashCols: Seq[String])(
+      partial: Seq[Int] => Long)(full: => Long): (String, Double, Long) = {
     val nb = bucketsOf(spark, table)
-    if (nb == 0) return 1.0
-    val touched = spark.table(ledger)
-      .select(expr(s"pmod(hash(${hashCols.mkString(", ")}), $nb)"))
-      .distinct().count()
-    touched.toDouble / nb
+    val (f, parts) =
+      if (!spark.catalog.tableExists(ledger)) (0.0, Nil)
+      else if (nb == 0) (1.0, Nil)
+      else {
+        val ps = touchedPartitions(spark, ledger, nb, hashCols)
+        (ps.size.toDouble / nb, ps)
+      }
+    if (f < LexIndex.RelevelPartialMaxFraction) ("partial", f, partial(parts))
+    else ("full", f, full)
   }
 
-  /** The family's re-level POLICY verb (the LexIndex.relevel shape —
-    * threshold measured on the pattern family, RELEVEL_r18.json;
-    * the three mirrors share the same cost structure because their
-    * partial paths are [[relevelPartitions]] instances): partial below
-    * [[LexIndex.RelevelPartialMaxFraction]], full at complete cover.
-    * Returns (path, touched fraction, partitions rewritten).
+  /** The family's re-level POLICY verb ([[relevelBy]]; the three
+    * mirrors share the same cost structure because their partial paths
+    * are [[relevelPartitions]] instances). Returns (path, touched
+    * fraction, partitions rewritten).
     */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = touchedFractionOf(spark, s"${tag}_btouched", s"${tag}_bands",
-      Seq("band", "bh"))
-    if (f < LexIndex.RelevelPartialMaxFraction)
-      ("partial", f, refreshBucketSizesPartial(spark, tag))
-    else {
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    relevelBy(spark, s"${tag}_btouched", s"${tag}_bands", Seq("band", "bh"))(
+      parts => refreshBucketSizesPartial(spark, tag, parts)) {
       refreshBucketSizes(spark, tag)
-      ("full", f, bucketsOf(spark, s"${tag}_bands").toLong)
+      bucketsOf(spark, s"${tag}_bands").toLong
     }
-  }
 
   /** Ledger seeding for policy specs/benches — see
     * [[LexIndex.seedTouchedForBench]]; production paths never call it.
@@ -498,19 +535,24 @@ object BandIndex {
     * gate broken → rebuild, never a shingles/bands mismatch (the
     * IvfIndex split/merge write order). Returns (shingle rows removed,
     * band rows removed).
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
   def delete(spark: SparkSession, docIds: DataFrame,
-             tag: String): (Long, Long) = {
+             tag: String,
+             beforeWrites: () => Unit = () => ()): (Long, Long) = {
     val shT = s"${tag}_shingles"
     val bdT = s"${tag}_bands"
     require(spark.catalog.tableExists(shT) && spark.catalog.tableExists(bdT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
+    val ids = takedownIds(spark, docIds, "doc_id")
     val sh = spark.table(shT)
     val bd = spark.table(bdT)
     val shRemoved = sh.join(ids, Seq("doc_id"), "left_semi").count()
     val bdRemoved = bd.join(ids, Seq("doc_id"), "left_semi").count()
     if (shRemoved == 0L && bdRemoved == 0L) return (0L, 0L)
+    beforeWrites()
     // ledger first (crash order): the deleted docs' buckets are exactly
     // the keys whose surviving bsz is about to go stale
     recordTouched(spark, tag,
@@ -570,14 +612,16 @@ object BandIndex {
     * the full refresh is an O(index) rewrite; this is O(partitions
     * touched by the batch's buckets). Returns partitions rewritten.
     */
-  def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long = {
+  def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long =
+    refreshBucketSizesPartial(spark, tag, touchedPartitions(spark,
+      s"${tag}_btouched", bucketsOf(spark, s"${tag}_bands"), Seq("band", "bh")))
+
+  private def refreshBucketSizesPartial(spark: SparkSession, tag: String,
+                                        parts: Seq[Int]): Long = {
     val bdT = s"${tag}_bands"
     ensureTouched(spark, tag)
     val nb = bucketsOf(spark, bdT)
-    relevelPartitions(spark, bdT,
-      spark.table(s"${tag}_btouched")
-        .select(expr(s"pmod(hash(band, bh), $nb)").cast("int").as("pbk")),
-      "pbk",
+    relevelPartitions(spark, bdT, parts, "pbk",
       scan => withPbk(withKeyCount(
           scan.select(col("doc_id"), col("band"), col("bh")),
           Seq("band", "bh"), "bsz"), nb)

@@ -134,15 +134,20 @@ object ChunkStore {
     * the staged survivors are materialized (localCheckpoint) before the
     * overwrite — the write plan must not scan its own target. Returns
     * chunk rows removed.
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
-  def delete(spark: SparkSession, docIds: DataFrame, tag: String): Long = {
+  def delete(spark: SparkSession, docIds: DataFrame, tag: String,
+             beforeWrites: () => Unit = () => ()): Long = {
     val cT = chunksT(tag)
     require(spark.catalog.tableExists(cT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
     val t = spark.table(cT)
     val removed = t.join(ids, Seq("doc_id"), "left_semi").count()
     if (removed == 0L) return 0L
+    beforeWrites()
     val buckets = BandIndex.bucketsOf(spark, cT)
     val staged = t.join(ids, Seq("doc_id"), "left_anti")
       .select("doc_id", "chunk_idx", "start_tok", "n_chunk_tok", "chunk_fp")

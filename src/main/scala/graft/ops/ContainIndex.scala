@@ -281,14 +281,16 @@ object ContainIndex {
     * (byte-identical files — spec-pinned). Returns (posting partitions
     * rewritten, doc partitions rewritten).
     */
-  def refreshCountsPartial(spark: SparkSession, tag: String): (Long, Long) = {
+  def refreshCountsPartial(spark: SparkSession, tag: String): (Long, Long) =
+    refreshCountsPartial(spark, tag, BandIndex.touchedPartitions(spark,
+      touchT(tag), BandIndex.bucketsOf(spark, ngramT(tag)), Seq("g1")))
+
+  private def refreshCountsPartial(spark: SparkSession, tag: String,
+                                   touchedPbs: Seq[Int]): (Long, Long) = {
     val ngT = ngramT(tag)
     val dcT = docT(tag)
     ensureTouched(spark, tag)
     val nb = BandIndex.bucketsOf(spark, ngT)
-    val touchedPbs = spark.table(touchT(tag))
-      .select(expr(s"pmod(hash(g1), $nb)").cast("int").as("pb"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
     if (touchedPbs.isEmpty) return (0L, 0L)
     // 1. posting df re-level, partition-pruned (the
     // BandIndex.relevelPartitions shape, inlined because leg 2 below
@@ -329,17 +331,14 @@ object ContainIndex {
     * complete cover. Returns (path, touched fraction, partitions
     * rewritten — posting + doc partitions summed for the partial path).
     */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = BandIndex.touchedFractionOf(spark, touchT(tag), ngramT(tag),
-      Seq("g1"))
-    if (f < LexIndex.RelevelPartialMaxFraction) {
-      val (ng, dc) = refreshCountsPartial(spark, tag)
-      ("partial", f, ng + dc)
-    } else {
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    BandIndex.relevelBy(spark, touchT(tag), ngramT(tag), Seq("g1")) { parts =>
+      val (ng, dc) = refreshCountsPartial(spark, tag, parts)
+      ng + dc
+    } {
       refreshCounts(spark, tag)
-      ("full", f, BandIndex.bucketsOf(spark, ngramT(tag)).toLong)
+      BandIndex.bucketsOf(spark, ngramT(tag)).toLong
     }
-  }
 
   /** Ledger seeding for policy specs/benches — see
     * [[LexIndex.seedTouchedForBench]]; production paths never call it.
@@ -371,19 +370,24 @@ object ContainIndex {
     * crash between the writes breaks the both-tables gate into a
     * rebuild (the IvfIndex split/merge write order). Returns
     * (posting rows removed, doc-array rows removed).
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
   def delete(spark: SparkSession, docIds: DataFrame,
-             tag: String): (Long, Long) = {
+             tag: String,
+             beforeWrites: () => Unit = () => ()): (Long, Long) = {
     val ngT = ngramT(tag)
     val dcT = docT(tag)
     require(spark.catalog.tableExists(ngT) && spark.catalog.tableExists(dcT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
     val ng = spark.table(ngT)
     val dc = spark.table(dcT)
     val ngRemoved = ng.join(ids, Seq("doc_id"), "left_semi").count()
     val dcRemoved = dc.join(ids, Seq("doc_id"), "left_semi").count()
     if (ngRemoved == 0L && dcRemoved == 0L) return (0L, 0L)
+    beforeWrites()
     // ledger first (crash order): the deleted docs' n-grams are exactly
     // the keys whose surviving df is about to go stale
     recordTouched(spark, tag,

@@ -210,7 +210,11 @@ object CorpusQueries {
 
   private[graft] def stagedDocs(s: org.apache.spark.sql.SparkSession,
                                 dir: String): org.apache.spark.sql.DataFrame =
-    stagedMemo.getOrElseUpdate((s, dir), {
+    // synchronized (the ccMemo pattern): TrieMap.getOrElseUpdate may run
+    // the initializer once per racing caller, and this one runs the
+    // funnel build and registers persist/track/onRelease — it must run
+    // once even when consumers arrive from concurrent driver threads.
+    stagedMemo.synchronized { stagedMemo.getOrElseUpdate((s, dir), {
       val staged = SharedCaches.track(SharedCaches.Funnel,
         stagedDocsUncached(s, dir)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -218,7 +222,7 @@ object CorpusQueries {
         stagedMemo.remove((s, dir)); ()
       }
       staged
-    })
+    }) }
 
   private def stagedDocsUncached(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame = {

@@ -315,72 +315,109 @@ object GovernanceQueries {
   /** Generous per-phase bound for [[parPhase]] — a wedged family write
     * fails the query with a diagnostic instead of hanging it forever
     * (r18 verdict "What's wrong" #4). Orders of magnitude above any
-    * real phase (bench phases run in seconds).
+    * real phase (bench phases run in seconds). Query-surface phases
+    * only: `Pipeline.deleteDocs` waits for its verbs without a bound.
     */
   private[graft] val PhaseTimeout: scala.concurrent.duration.FiniteDuration =
     scala.concurrent.duration.Duration(10, "min")
 
-  /** Run three independent stored-family verbs concurrently and barrier
-    * on ALL outcomes (r18 §2.6 overlap + r18 ADVICE #3 hardening):
+  /** Run independent stored-family verbs concurrently and barrier on
+    * ALL outcomes (r18 §2.6 overlap + r18 ADVICE #3 hardening):
     *
     *   - each verb runs under its own Spark job group
     *     (`interruptOnCancel`), so a failing verb CANCELS its siblings'
-    *     in-flight jobs instead of leaving them writing detached;
+    *     in-flight READ jobs instead of leaving them running detached;
+    *   - each verb is handed a write gate, which it calls once its
+    *     read-only stage is done and before its first write (ledger,
+    *     drop or rewrite). A verb past its gate is never cancelled: an
+    *     interrupt between a drop and its rewrite would leave that
+    *     family's tables dropped or half-written. A verb that reaches
+    *     its gate after a sibling failed stops there, before writing;
+    *     a verb that never calls it stays cancellable throughout;
     *   - the phase waits for every future's OUTCOME (success or
     *     failure) before returning or rethrowing — no verb is still
-    *     running when the barrier is crossed;
-    *   - the await is bounded by [[PhaseTimeout]] (a wedged write fails
-    *     the query, with all three groups cancelled, rather than
-    *     hanging it with no diagnostic);
+    *     running when the barrier is crossed — and rethrows the FIRST
+    *     failure in time (a sibling's cancellation error never masks
+    *     the cause);
+    *   - the await is bounded by `timeout` (a wedged verb fails the
+    *     phase, with every group short of its gate cancelled, rather
+    *     than hanging it with no diagnostic);
     *   - the one session-global knob these verbs must not touch
     *     (`spark.sql.sources.partitionOverwriteMode` — the dynamic-
     *     overwrite flip lives only in refresh/re-level paths) is
     *     ASSERTED unchanged across the phase, turning the comment-level
     *     single-writer claim into a checked invariant.
+    *
+    * Results come back in `verbs` order.
     */
-  private[graft] def parPhase[A, B, C](s: org.apache.spark.sql.SparkSession,
-      phaseTag: String)(fa: => A)(fb: => B)(fc: => C)(
-      implicit ec: scala.concurrent.ExecutionContext): (A, B, C) = {
+  private[graft] def parPhase[T](s: org.apache.spark.sql.SparkSession,
+      phaseTag: String, verbs: Seq[(() => Unit) => T],
+      timeout: scala.concurrent.duration.Duration)(
+      implicit ec: scala.concurrent.ExecutionContext): Seq[T] = {
     import scala.concurrent.{Await, Future}
     val OverwriteKey = "spark.sql.sources.partitionOverwriteMode"
     val owBefore = s.conf.getOption(OverwriteKey)
-    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val tags = Seq("a", "b", "c")
-    def grp(tag: String) = s"$phaseTag-$tag"
-    def run[T](tag: String)(body: => T): Future[T] = Future {
-      s.sparkContext.setJobGroup(grp(tag),
-        s"$phaseTag family $tag", interruptOnCancel = true)
-      try body
+    val groups = verbs.indices.map(i => s"$phaseTag-$i")
+    // guarded by `lock`: a verb passes its gate and a failure cancels
+    // the siblings short of theirs atomically, so no write is cancelled
+    val lock = new Object
+    var firstFailure: Throwable = null
+    val writing = Array.fill(verbs.size)(false)
+    def cancelReaders(except: Int): Unit = groups.indices
+      .filter(j => j != except && !writing(j))
+      .foreach(j => s.sparkContext.cancelJobGroup(groups(j)))
+    def gate(i: Int): Unit = lock.synchronized {
+      if (firstFailure != null)
+        throw new java.util.concurrent.CancellationException(
+          s"$phaseTag family $i: a sibling failed before this verb's first write")
+      writing(i) = true
+    }
+    def run(i: Int): Future[T] = Future {
+      s.sparkContext.setJobGroup(groups(i),
+        s"$phaseTag family $i", interruptOnCancel = true)
+      try verbs(i)(() => gate(i))
       catch { case t: Throwable =>
-        // fail fast: first failure cancels the siblings' running jobs
+        // fail fast: first failure cancels the siblings still reading
         // (their futures still complete — the barrier below waits for
         // them — but they stop burning the cluster on doomed work)
-        if (failed.compareAndSet(false, true))
-          tags.filter(_ != tag).foreach(o => s.sparkContext.cancelJobGroup(grp(o)))
+        lock.synchronized {
+          if (firstFailure == null) {
+            firstFailure = t
+            cancelReaders(except = i)
+          }
+        }
         throw t
       } finally s.sparkContext.clearJobGroup()
     }
-    val (a, b, c) = (run("a")(fa), run("b")(fb), run("c")(fc))
-    val allOutcomes = Future.sequence(
-      Seq[Future[scala.util.Try[Any]]](
-        a.transform(scala.util.Success(_)),
-        b.transform(scala.util.Success(_)),
-        c.transform(scala.util.Success(_))))
-    val outcomes =
-      try Await.result(allOutcomes, PhaseTimeout)
-      catch { case e: java.util.concurrent.TimeoutException =>
-        tags.foreach(t => s.sparkContext.cancelJobGroup(grp(t)))
-        throw new RuntimeException(
-          s"$phaseTag: a family verb exceeded $PhaseTimeout — " +
-            "cancelled all three job groups", e)
-      }
-    outcomes.collectFirst { case scala.util.Failure(t) => throw t }
+    val futures = verbs.indices.map(run)
+    val allOutcomes = Future.sequence(futures.map(_.transform(scala.util.Success(_))))
+    try Await.result(allOutcomes, timeout)
+    catch { case e: java.util.concurrent.TimeoutException =>
+      lock.synchronized(cancelReaders(except = -1))
+      throw new RuntimeException(
+        s"$phaseTag: a family verb exceeded $timeout — " +
+          "cancelled every job group short of its write gate", e)
+    }
+    lock.synchronized(Option(firstFailure)).foreach(t => throw t)
     val owAfter = s.conf.getOption(OverwriteKey)
     require(owBefore == owAfter,
       s"$phaseTag mutated session conf $OverwriteKey: " +
         s"$owBefore -> $owAfter — family verbs must not touch it")
-    // all three completed successfully past the barrier
-    (a.value.get.get, b.value.get.get, c.value.get.get)
+    // every verb completed successfully past the barrier
+    futures.map(_.value.get.get)
+  }
+
+  /** The three-verb form of [[parPhase]] (q_takedown_audit's phases):
+    * bounded by [[PhaseTimeout]], and no verb calls its write gate, so
+    * a failure cancels every sibling wherever it is. Each phase
+    * rebuilds its tables from scratch on the next execution.
+    */
+  private[graft] def parPhase[A, B, C](s: org.apache.spark.sql.SparkSession,
+      phaseTag: String)(fa: => A)(fb: => B)(fc: => C)(
+      implicit ec: scala.concurrent.ExecutionContext): (A, B, C) = {
+    val r = parPhase[Any](s, phaseTag,
+      Seq(_ => fa, _ => fb, _ => fc), PhaseTimeout)
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -56,6 +56,20 @@ object IvfIndex {
     spark.catalog.tableExists(cellsT(tag)) &&
       spark.catalog.tableExists(centT(tag))
 
+  /** The tags of every IVF index cataloged for corpus `dir`, of any
+    * cell count, read from the catalog's table names (the [[tag]]
+    * embeds the count) — so a caller need not scan the embeddings to
+    * derive it. Sorted; check [[exists]] before use.
+    */
+  def catalogedTags(spark: SparkSession, dir: String): Seq[String] = {
+    val prefix = BandIndex.tag(dir, "ivf")
+    spark.sessionState.catalog
+      .listTables(spark.catalog.currentDatabase, s"$prefix*_ivfcells")
+      .map(_.table.stripSuffix("_ivfcells"))
+      .filter(_.stripPrefix(prefix).matches("[0-9]+"))
+      .distinct.sorted.toSeq
+  }
+
   /** Derived bucket count this tag was built with (report-row metric). */
   def buckets(spark: SparkSession, tag: String): Int =
     BandIndex.bucketsOf(spark, cellsT(tag))
@@ -435,15 +449,20 @@ object IvfIndex {
     * (localCheckpoint) before the overwrite. A crash mid-overwrite
     * leaves the cells table partial/missing, which the both-tables gate
     * turns into a rebuild. Returns cell rows removed.
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
-  def delete(spark: SparkSession, vecIds: DataFrame, tag: String): Long = {
+  def delete(spark: SparkSession, vecIds: DataFrame, tag: String,
+             beforeWrites: () => Unit = () => ()): Long = {
     val (cT, mT) = (cellsT(tag), centT(tag))
     require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(vecIds.select(col("vec_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, vecIds, "vec_id")
     val cells = spark.table(cT)
     val removed = cells.join(ids, Seq("vec_id"), "left_semi").count()
     if (removed == 0L) return 0L
+    beforeWrites()
     val buckets = BandIndex.bucketsOf(spark, cT)
     val staged = cells.join(ids, Seq("vec_id"), "left_anti")
       .select("vec_id", "v", "nrm", "cell")

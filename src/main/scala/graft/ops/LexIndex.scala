@@ -213,15 +213,6 @@ object LexIndex {
                                          terms: DataFrame): Unit =
     recordTouched(spark, tag, terms)
 
-  /** Fraction of the posting table's partitions the current ledger
-    * touches — the re-level POLICY's input ([[relevel]]): |distinct
-    * pmod(hash(term), nb) over the ledger| / nb. Ledger-grain work
-    * (batch vocabulary), no posting scan.
-    */
-  def touchedFraction(spark: SparkSession, tag: String): Double =
-    BandIndex.touchedFractionOf(spark, touchT(tag), postT(tag),
-      Seq("term"))
-
   /** Partial-vs-full re-level policy threshold, set from MEASUREMENT
     * (r18, `RELEVEL_r18.json` — sf0.1, 32 partitions, medians of 3
     * reps on fresh identical pre-states; SCALE.md §"Pricing the
@@ -252,15 +243,12 @@ object LexIndex {
     * rewritten) for the caller's report row — the decision must be
     * visible, not silent.
     */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = touchedFraction(spark, tag)
-    if (f < RelevelPartialMaxFraction)
-      ("partial", f, refreshCountsPartial(spark, tag))
-    else {
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    BandIndex.relevelBy(spark, touchT(tag), postT(tag), Seq("term"))(
+      parts => refreshCountsPartial(spark, tag, parts)) {
       refreshCounts(spark, tag)
-      ("full", f, BandIndex.bucketsOf(spark, postT(tag)).toLong)
+      BandIndex.bucketsOf(spark, postT(tag)).toLong
     }
-  }
 
   /** Posting rows of a doc relation (doc_id, text): one row per
     * (doc, distinct term) with tf and dl — the derivation [[buildOrLoad]]
@@ -414,14 +402,16 @@ object LexIndex {
     * untouched partitions are not rewritten (byte-identical files —
     * spec-pinned). Returns the number of partitions rewritten.
     */
-  def refreshCountsPartial(spark: SparkSession, tag: String): Long = {
+  def refreshCountsPartial(spark: SparkSession, tag: String): Long =
+    refreshCountsPartial(spark, tag, BandIndex.touchedPartitions(spark,
+      touchT(tag), BandIndex.bucketsOf(spark, postT(tag)), Seq("term")))
+
+  private def refreshCountsPartial(spark: SparkSession, tag: String,
+                                   parts: Seq[Int]): Long = {
     val pT = postT(tag)
     ensureTouched(spark, tag)
     val nb = BandIndex.bucketsOf(spark, pT)
-    BandIndex.relevelPartitions(spark, pT,
-      spark.table(touchT(tag))
-        .select(expr(s"pmod(hash(term), $nb)").cast("int").as("pb")),
-      "pb",
+    BandIndex.relevelPartitions(spark, pT, parts, "pb",
       scan => withPb(withDf(scan
           .select(col("term"), col("doc_id"), col("tf"), col("dl"))), nb)
         .select("term", "doc_id", "tf", "dl", "df", "pb"),
@@ -451,18 +441,23 @@ object LexIndex {
     * anywhere between breaks the gate into a rebuild, never a
     * postings/stats mismatch (the IvfIndex split/merge order). Returns
     * posting rows removed.
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
-  def delete(spark: SparkSession, docIds: DataFrame, tag: String): Long = {
+  def delete(spark: SparkSession, docIds: DataFrame, tag: String,
+             beforeWrites: () => Unit = () => ()): Long = {
     val (pT, sT) = (postT(tag), statsT(tag))
     require(spark.catalog.tableExists(pT) && spark.catalog.tableExists(sT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
     val post = spark.table(pT)
     val gone = post.join(ids, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val removed = gone.count()
       if (removed == 0L) return 0L
+      beforeWrites()
       recordTouched(spark, tag, gone.select("term"))
       // the deleted docs' exact stats contribution, from their own
       // stored rows (dl rides on every posting); standing row

@@ -239,18 +239,23 @@ object MediaSigStore {
     * table — written second at build — drops FIRST so a crash between
     * the writes breaks the both-tables gate into a rebuild. Returns
     * (signature rows removed, band rows removed).
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
   def delete(spark: SparkSession, docIds: DataFrame,
-             tag: String): (Long, Long) = {
+             tag: String,
+             beforeWrites: () => Unit = () => ()): (Long, Long) = {
     val (sT, bT) = (sigT(tag), bandT(tag))
     require(spark.catalog.tableExists(sT) && spark.catalog.tableExists(bT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
     val sigs = spark.table(sT)
     val bands = spark.table(bT)
     val sRemoved = sigs.join(ids, Seq("doc_id"), "left_semi").count()
     val bRemoved = bands.join(ids, Seq("doc_id"), "left_semi").count()
     if (sRemoved == 0L && bRemoved == 0L) return (0L, 0L)
+    beforeWrites()
     // ledger first (crash order): the deleted items' buckets are the
     // keys whose surviving bsz is about to go stale
     recordTouched(spark, tag,
@@ -301,14 +306,16 @@ object MediaSigStore {
     * from-signatures full refresh row-for-row, untouched partitions
     * byte-identical). Returns partitions rewritten.
     */
-  def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long = {
+  def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long =
+    refreshBucketSizesPartial(spark, tag, BandIndex.touchedPartitions(spark,
+      touchT(tag), BandIndex.bucketsOf(spark, bandT(tag)), Seq("bk")))
+
+  private def refreshBucketSizesPartial(spark: SparkSession, tag: String,
+                                        parts: Seq[Int]): Long = {
     val bT = bandT(tag)
     ensureTouched(spark, tag)
     val nb = BandIndex.bucketsOf(spark, bT)
-    BandIndex.relevelPartitions(spark, bT,
-      spark.table(touchT(tag))
-        .select(expr(s"pmod(hash(bk), $nb)").cast("int").as("pbk")),
-      "pbk",
+    BandIndex.relevelPartitions(spark, bT, parts, "pbk",
       scan => withPbk(BandIndex.withKeyCount(
           scan.select(col("bk"), col("doc_id")),
           Seq("bk"), "bsz"), nb)
@@ -316,22 +323,17 @@ object MediaSigStore {
       () => clearTouched(spark, tag))
   }
 
-  /** The family's re-level POLICY verb (the LexIndex.relevel shape —
-    * threshold measured on the pattern family, RELEVEL_r18.json):
-    * partial below [[LexIndex.RelevelPartialMaxFraction]], full at
-    * complete cover. Returns (path, touched fraction, partitions
-    * rewritten).
+  /** The family's re-level POLICY verb ([[BandIndex.relevelBy]]: one
+    * ledger read, partial below [[LexIndex.RelevelPartialMaxFraction]],
+    * full at complete cover). Returns (path, touched fraction,
+    * partitions rewritten).
     */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = BandIndex.touchedFractionOf(spark, touchT(tag), bandT(tag),
-      Seq("bk"))
-    if (f < LexIndex.RelevelPartialMaxFraction)
-      ("partial", f, refreshBucketSizesPartial(spark, tag))
-    else {
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    BandIndex.relevelBy(spark, touchT(tag), bandT(tag), Seq("bk"))(
+      parts => refreshBucketSizesPartial(spark, tag, parts)) {
       refreshBucketSizes(spark, tag)
-      ("full", f, BandIndex.bucketsOf(spark, bandT(tag)).toLong)
+      BandIndex.bucketsOf(spark, bandT(tag)).toLong
     }
-  }
 
   /** Ledger seeding for policy specs/benches — see
     * [[LexIndex.seedTouchedForBench]]; production paths never call it.

@@ -148,16 +148,21 @@ object PqStore {
     * class doc argues for every codebook change. Anti-join rewrite
     * preserving the bucket spec, survivors staged (localCheckpoint)
     * before the overwrite. Returns code rows removed.
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
-  def delete(spark: SparkSession, vecIds: DataFrame, tag: String): Long = {
+  def delete(spark: SparkSession, vecIds: DataFrame, tag: String,
+             beforeWrites: () => Unit = () => ()): Long = {
     val cT = codesT(tag)
     require(spark.catalog.tableExists(cbT(tag)) &&
       spark.catalog.tableExists(cT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(vecIds.select(col("vec_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, vecIds, "vec_id")
     val t = spark.table(cT)
     val removed = t.join(ids, Seq("vec_id"), "left_semi").count()
     if (removed == 0L) return 0L
+    beforeWrites()
     val buckets = BandIndex.bucketsOf(spark, cT)
     val staged = t.join(ids, Seq("vec_id"), "left_anti")
       .select("vec_id", "nrm", "codes")

@@ -143,6 +143,12 @@ object SharedCaches {
   private[graft] def onRelease(family: String)(f: () => Unit): Unit =
     hooks.updateWith(family)(l => Some(f :: l.getOrElse(Nil)))
 
+  /** Release hooks registered under `family` since its last release —
+    * one per memo build, so a spec can see a memo built exactly once.
+    */
+  private[graft] def hookCount(family: String): Int =
+    hooks.get(family).map(_.size).getOrElse(0)
+
   /** Register `df` (already marked for caching) under `family` and
     * return it unchanged. Re-registration of an equivalent plan is fine:
     * unpersist on a no-longer-cached plan is a no-op.

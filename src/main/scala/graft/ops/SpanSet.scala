@@ -234,19 +234,24 @@ object SpanSet {
     * longer, the safe direction for a dedup artifact — and
     * [[refreshSpanCounts]] heals exactly (it rebuilds counts from
     * rows). Returns (span rows removed, negative delta rows inserted).
+    * `beforeWrites` runs once the read-only counts are done, before
+    * the first write: a concurrent caller's write gate
+    * (`GovernanceQueries.parPhase`), which may abort the verb there.
     */
   def delete(spark: SparkSession, docIds: DataFrame,
-             tag: String): (Long, Long) = {
+             tag: String,
+             beforeWrites: () => Unit = () => ()): (Long, Long) = {
     val (rT, sT) = (rowsT(tag), setT(tag))
     require(spark.catalog.tableExists(rT) && spark.catalog.tableExists(sT),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
+    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
     val rows = spark.table(rT)
     val gone = rows.join(ids, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val removed = gone.count()
       if (removed == 0L) return (0L, 0L)
+      beforeWrites()
       // negated per-fingerprint counts of the deleted rows, staged
       // BEFORE the rows rewrite (they derive from the table being
       // rewritten)

@@ -232,6 +232,164 @@ class PipelineSpec extends SparkSpec {
       again.map(_.detail).mkString("; "))
   }
 
+  test("deleteDocs: a family verb that throws fails the call, cancels " +
+    "its siblings' job groups and awaits every outcome first; the " +
+    "overwrite-mode conf is untouched") {
+    import spark.implicits._
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val F = org.apache.spark.sql.functions
+    val src = Files.createTempDirectory("graft-fault-src").toString
+    val dst = Files.createTempDirectory("graft-fault-dst").toString
+    (1L to 8L).map(i => (i, s"document $i has a few words number $i"))
+      .toDF("doc_id", "text").write.parquet(s"$src/docs.parquet")
+    val rnd = new scala.util.Random(9)
+    (1L to 40L).map(i => (i, Seq.fill(4)(rnd.nextFloat()), "en"))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$src/embeddings.parquet")
+    Pipeline.migrate(
+      spark, Pipeline.SourceConfig(dir = src), outDir = dst,
+      artifacts = Pipeline.ArtifactConfig(
+        chunkStoreTables = Seq("docs"),
+        lexIndexTables = Seq("docs"),
+        buildPqStore = true))
+    // fault injection through the catalog: temp views shadow two
+    // families' stored tables. The chunk store's first scan stalls in
+    // one task (a sibling mid-job); the PQ store's first scan throws
+    // once that sibling is running. The PQ scan is one task, so its
+    // wait holds one core and never starves the stalling sibling of
+    // the other. The lex index is untouched.
+    val chunkT = graft.ops.ChunkStore.tables(graft.ops.ChunkStore.tag(dst)).head
+    val codesT = graft.ops.PqStore.tables(graft.ops.PqStore.tag(dst)).last
+    spark.table(chunkT).where(PipelineSpec.stall(F.col("doc_id")))
+      .createOrReplaceTempView(chunkT)
+    spark.table(codesT).coalesce(1).where(PipelineSpec.fail(F.col("vec_id")))
+      .createOrReplaceTempView(codesT)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("delete-docs-"))
+          .foreach(g => starts.add((e.jobId, g, e.time)))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobResult != JobSucceeded) failed.add(e.jobId)
+    }
+    val owKey = "spark.sql.sources.partitionOverwriteMode"
+    val owBefore = spark.conf.getOption(owKey)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[Exception] {
+        Pipeline.deleteDocs(spark, dst, Seq(2L, 3L).toDF("doc_id"),
+          lexTables = Seq("docs"))
+      }
+      val returnedAt = System.currentTimeMillis()
+      val elapsedS = (System.nanoTime() - t0) / 1e9
+      // the call rethrows the injected fault, not a sibling's cancellation
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(PipelineSpec.Fault)),
+        e.toString)
+      // the stalled sibling's job was cancelled: left alone it runs
+      // for StallMs
+      assert(elapsedS * 1000 < PipelineSpec.StallMs / 2, s"took ${elapsedS}s")
+      // failed jobs in at least two of the call's job groups: the
+      // thrower's and a cancelled sibling's (listener events are
+      // asynchronous, so poll)
+      def failedGroups = starts.asScala.collect {
+        case (id, g, _) if failed.contains(id) => g }.toSeq.distinct
+      val deadline = System.nanoTime() + 20e9.toLong
+      while (failedGroups.length < 2 && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(failedGroups.length >= 2, starts.asScala.toSeq)
+      // every verb's outcome was in before the call returned: no job of
+      // the call starts after it
+      Thread.sleep(2000)
+      assert(starts.asScala.forall(_._3 <= returnedAt),
+        s"$returnedAt ${starts.asScala.toSeq}")
+      assert(spark.conf.getOption(owKey) == owBefore)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.catalog.dropTempView(chunkT)
+      spark.catalog.dropTempView(codesT)
+    }
+  }
+
+  test("deleteDocs: a family verb that throws while a sibling is " +
+    "between its drop and its rewrite leaves that sibling's tables " +
+    "whole, with exact row counts") {
+    import spark.implicits._
+    val F = org.apache.spark.sql.functions
+    val src = Files.createTempDirectory("graft-wfault-src").toString
+    val dst = Files.createTempDirectory("graft-wfault-dst").toString
+    (1L to 8L).map(i => (i, s"document $i has a few words number $i"))
+      .toDF("doc_id", "text").write.parquet(s"$src/docs.parquet")
+    val rnd = new scala.util.Random(11)
+    (1L to 40L).map(i => (i, Seq.fill(4)(rnd.nextFloat()), "en"))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$src/embeddings.parquet")
+    Pipeline.migrate(
+      spark, Pipeline.SourceConfig(dir = src), outDir = dst,
+      artifacts = Pipeline.ArtifactConfig(
+        chunkStoreTables = Seq("docs"),
+        lexIndexTables = Seq("docs"),
+        buildPqStore = true))
+    val chunkTag = graft.ops.ChunkStore.tag(dst)
+    val lexTag = graft.ops.LexIndex.tag(s"$dst/docs")
+    val chunkT = graft.ops.ChunkStore.tables(chunkTag).head
+    val postT = graft.ops.LexIndex.tables(lexTag).head
+    val codesT = graft.ops.PqStore.tables(graft.ops.PqStore.tag(dst)).last
+    val gone = F.col("doc_id").isin(2L, 3L)
+    val (chunks0, chunksGone) =
+      (spark.table(chunkT).count(), spark.table(chunkT).where(gone).count())
+    val (post0, postGone) =
+      (spark.table(postT).count(), spark.table(postT).where(gone).count())
+    val codes0 = spark.table(codesT).count()
+    assert(chunksGone > 0 && postGone > 0)
+    // the chunk store's rewrite (saveAsTable, which drops the table
+    // first) stalls in its first task; the PQ store's count throws
+    // once that stall is reached, so the failure lands while the chunk
+    // table is dropped and not yet rewritten
+    spark.table(codesT).coalesce(1)
+      .where(PipelineSpec.failOnceWriting(F.col("vec_id")))
+      .createOrReplaceTempView(codesT)
+    val protocolKey = "spark.sql.sources.commitProtocolClass"
+    val protocolBefore = spark.conf.getOption(protocolKey)
+    val owKey = "spark.sql.sources.partitionOverwriteMode"
+    val owBefore = spark.conf.getOption(owKey)
+    spark.conf.set(protocolKey, classOf[StallingCommitProtocol].getName)
+    StallingCommitProtocol.arm(chunkT)
+    try {
+      val e = intercept[Exception] {
+        Pipeline.deleteDocs(spark, dst, Seq(2L, 3L).toDF("doc_id"),
+          lexTables = Seq("docs"))
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(PipelineSpec.Fault)),
+        e.toString)
+      assert(StallingCommitProtocol.stalled.getCount == 0,
+        "the chunk store's rewrite never reached its write task")
+    } finally {
+      StallingCommitProtocol.arm("")
+      protocolBefore match {
+        case Some(v) => spark.conf.set(protocolKey, v)
+        case None => spark.conf.unset(protocolKey)
+      }
+      spark.catalog.dropTempView(codesT)
+    }
+    assert(spark.conf.getOption(owKey) == owBefore)
+    // the sibling that was mid-rewrite finished it: table present,
+    // exactly the takedown's rows gone
+    assert(graft.ops.ChunkStore.exists(spark, chunkTag))
+    assert(spark.table(chunkT).count() == chunks0 - chunksGone)
+    assert(spark.table(chunkT).where(gone).count() == 0L)
+    // the other sibling is untouched or fully deleted, never partial
+    assert(graft.ops.LexIndex.exists(spark, lexTag))
+    assert(Set(post0, post0 - postGone)(spark.table(postT).count()))
+    // the failing family failed in its read-only count: untouched
+    assert(spark.table(codesT).count() == codes0)
+  }
+
   test("relevelLexIndexes applies the MEASURED partial-vs-full policy " +
     "(r17 verdict missing #2) and the report row documents path + " +
     "fraction + threshold; each path restores exact df") {
@@ -335,4 +493,66 @@ class PipelineSpec extends SparkSpec {
     Seq(2).toDF("b").write.parquet(s"$d/t2.parquet")
     assert(Pipeline.reflectTables(d) == Seq("t1", "t2"))
   }
+}
+
+object PipelineSpec {
+  val Fault = "injected takedown fault"
+  val StallMs = 60000L
+  private val stalling = new java.util.concurrent.CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+
+  /** A filter whose first row sleeps until its task is interrupted. */
+  val stall = org.apache.spark.sql.functions.udf { (_: Long) =>
+    if (first.getAndSet(false)) {
+      stalling.countDown()
+      Thread.sleep(StallMs)
+    }
+    true
+  }.asNondeterministic()
+
+  /** A filter that throws once [[StallingCommitProtocol]] holds its
+    * stalled write task.
+    */
+  val failOnceWriting = org.apache.spark.sql.functions.udf { (_: Long) =>
+    StallingCommitProtocol.stalled.await(StallMs,
+      java.util.concurrent.TimeUnit.MILLISECONDS)
+    StallingCommitProtocol.thrown.countDown()
+    (throw new IllegalStateException(Fault)): Boolean
+  }.asNondeterministic()
+
+  /** A filter that throws once the stalled task is running. */
+  val fail = org.apache.spark.sql.functions.udf { (_: Long) =>
+    stalling.await(StallMs, java.util.concurrent.TimeUnit.MILLISECONDS)
+    (throw new IllegalStateException(Fault)): Boolean
+  }.asNondeterministic()
+}
+
+/** A file commit protocol whose first task writing into the armed
+  * table's location stalls until [[PipelineSpec.failOnceWriting]] has
+  * thrown, then for a few seconds more: long enough for a cancellation
+  * of its job group to interrupt it, were one sent.
+  */
+class StallingCommitProtocol(jobId: String, path: String, dpo: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path, dpo) {
+  override def setupTask(ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+      : Unit = {
+    if (new org.apache.hadoop.fs.Path(path).getName ==
+        StallingCommitProtocol.armed.get &&
+      StallingCommitProtocol.first.getAndSet(false)) {
+      StallingCommitProtocol.stalled.countDown()
+      StallingCommitProtocol.thrown.await(PipelineSpec.StallMs,
+        java.util.concurrent.TimeUnit.MILLISECONDS)
+      Thread.sleep(3000)
+    }
+    super.setupTask(ctx)
+  }
+}
+
+object StallingCommitProtocol {
+  private[etl] val armed = new java.util.concurrent.atomic.AtomicReference("")
+  private[etl] val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+  val stalled = new java.util.concurrent.CountDownLatch(1)
+  val thrown = new java.util.concurrent.CountDownLatch(1)
+  def arm(table: String): Unit = armed.set(table)
 }

@@ -41,6 +41,29 @@ class SharedCachesSpec extends SparkSpec {
     SharedCaches.release(SharedCaches.Minhash)
   }
 
+  test("the funnel memo single-flights two racing first consumers: one " +
+    "build and one SharedCaches registration") {
+    SharedCaches.release(SharedCaches.Funnel)
+    assert(SharedCaches.hookCount(SharedCaches.Funnel) == 0)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val consumers = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+          def call() = { go.await(); CorpusQueries.stagedDocs(spark, dir) }
+        }))
+      go.countDown()
+      val built = consumers.map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+      assert(built(0) eq built(1), "both consumers must get the one memo")
+      assert(SharedCaches.hookCount(SharedCaches.Funnel) == 1,
+        "the memo must be built and registered once")
+    } finally {
+      pool.shutdown()
+      SharedCaches.release(SharedCaches.Funnel)
+      SharedCaches.release(SharedCaches.Minhash)
+    }
+  }
+
   test("release after the last consumer does not change results — the " +
     "family rebuilds transparently on next touch") {
     val q = Registry.queryMap("q_doc_dedup")
