@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   * Fractions {1%, 10%, 50%, 100%}, median of 3 reps each on a fresh
   * identical pre-state. Emits ONE JSON line (the Bench convention);
   * the committed record is RELEVEL_r18.json, and the resulting policy
-  * threshold lives at [[graft.ops.LexIndex.RelevelPartialMaxFraction]]
+  * threshold lives at [[graft.ops.BucketedStore.RelevelPartialMaxFraction]]
   * with the SCALE.md table explaining the why.
   */
 object RelevelBench {
@@ -64,12 +64,12 @@ object RelevelBench {
     // contract is terms, not known terms — partial re-levels a
     // term-free partition idempotently) so the f=1.0 row really
     // touches EVERY partition, not just the vocabulary's image.
-    val vocabPerPb = post.select("term").distinct()
-      .withColumn("pb", expr(s"pmod(hash(term), $nb)"))
+    val postings = ops.LexIndex.postings(tag)
+    val vocabPerPb = postings.withMirror(post.select("term").distinct(), nb)
       .groupBy("pb").agg(min("term").as("term"))
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    val synthPerPb = (0 until 5000).map(i => s"x$i").toDF("term")
-      .withColumn("pb", expr(s"pmod(hash(term), $nb)"))
+    val synthPerPb = postings.withMirror(
+        (0 until 5000).map(i => s"x$i").toDF("term"), nb)
       .groupBy("pb").agg(min("term").as("term"))
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     val termPerPb = synthPerPb ++ vocabPerPb

@@ -807,7 +807,7 @@ object Pipeline {
     * (r17 verdict missing #2; `RELEVEL_r18.json` + SCALE.md §"Pricing
     * the re-level knob"): [[graft.ops.LexIndex.relevel]] reads each
     * index's touched-partition fraction and takes the bounded partial
-    * path below [[graft.ops.LexIndex.RelevelPartialMaxFraction]], the
+    * path below [[graft.ops.BucketedStore.RelevelPartialMaxFraction]], the
     * wholesale re-level at or above it. One report row per index
     * documents WHICH path was taken and WHY (the fraction and the
     * threshold) — the policy must be visible in the migration report,
@@ -823,7 +823,7 @@ object Pipeline {
     val (path, frac, parts) = f
     val secs = (System.nanoTime() - t0) / 1e9
     val detail = f"tag=$tag path=$path touched_fraction=$frac%.4f " +
-      f"threshold=${graft.ops.LexIndex.RelevelPartialMaxFraction}%.2f " +
+      f"threshold=${graft.ops.BucketedStore.RelevelPartialMaxFraction}%.2f " +
       s"parts_rewritten=$parts"
     log.info(tag, kind, detail)
     Seq(Report.ArtifactResult(tag, kind, detail, 0L, 0L, secs))
@@ -849,7 +849,7 @@ object Pipeline {
     * run after mutations, never inside them. The families re-level one
     * after another, unlike [[deleteDocs]]: every partial path flips the
     * session-global `spark.sql.sources.partitionOverwriteMode`
-    * (`BandIndex.overwritePartitionsDynamic`), so two cannot overlap.
+    * (`BucketedStore.overwritePartitionsDynamic`), so two cannot overlap.
     */
   def relevelArtifacts(
       spark: SparkSession,

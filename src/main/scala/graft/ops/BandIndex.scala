@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored MinHash dedup index — the materialized artifact the
@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   *   - `<tag>_shingles` (doc_id, sh)            bucketed by doc_id
   *   - `<tag>_bands`    (doc_id, band, bh, bsz) bucketed by (band, bh),
-  *     partitioned by pbk = pmod(hash(band, bh), nb) — the LexIndex pb
-  *     mirror enabling [[refreshBucketSizesPartial]] (r17)
+  *     partitioned by the pbk mirror of the bucket hash (r17 — see
+  *     [[BucketedStore]]) enabling [[refreshBucketSizesPartial]]
   *   - `<tag>_btouched` (band, bh) — the touched-bucket ledger
   *     appends/deletes record BEFORE mutating, refresh paths reset
   *
@@ -146,11 +146,11 @@ object BandIndex {
     * The `key` values are collected once and deduplicated on the
     * driver into a local relation, and that is what is broadcast: a
     * plan-level distinct re-ran its shuffle and broadcast jobs at every
-    * use inside a verb (five uses in [[delete]] alone). Collecting a
-    * local relation — the set a `Pipeline.deleteDocs` call builds once
-    * and hands to every verb — runs no job, so every verb and every
-    * step inside a verb sees the same ids even when the caller's
-    * relation is nondeterministic. Same size assumption as the
+    * use inside a verb (five uses in [[BucketedStore.deleteBoth]]).
+    * Collecting a local relation — the set a `Pipeline.deleteDocs`
+    * call builds once and hands to every verb — runs no job, so every
+    * verb and every step inside a verb sees the same ids even when the
+    * caller's relation is nondeterministic. Same size assumption as the
     * broadcast it replaces: a takedown batch is small.
     */
   private[graft] def takedownIds(spark: SparkSession, ids: DataFrame,
@@ -160,157 +160,13 @@ object BandIndex {
       java.util.Arrays.asList(keys.collect().distinct: _*), keys.schema))
   }
 
-  /** Dynamic-partition overwrite of `staged` into `table` — the ONE
-    * place the session-global `spark.sql.sources.partitionOverwriteMode`
-    * is flipped (r17 ADVICE adjudicated): the advised per-writer
-    * `option("partitionOverwriteMode", "dynamic")` is NOT honored by
-    * the `insertInto` catalog-table path in Spark 4.1 — tested in r18:
-    * the write ran STATIC and erased every untouched partition
-    * (BandIndexSpec's byte-identical differential caught it). So the
-    * conf flip stays, but centralized here: the set/restore window is
-    * the one write, every partial re-level shares this body, and the
-    * documented constraint is single-writer-per-session during
-    * maintenance: re-levels run one after another
-    * (`Pipeline.relevelArtifacts`). Delete and build verbs never call
-    * this, so they may overlap across families (`Pipeline.deleteDocs`,
-    * q_takedown_audit); `GovernanceQueries.parPhase` asserts the conf
-    * is untouched at its barrier. Refreshes the catalog entry after
-    * (cached file listings must not serve the pre-overwrite files).
-    */
-  private[ops] def overwritePartitionsDynamic(spark: SparkSession,
-                                              staged: DataFrame,
-                                              table: String): Unit = {
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, "dynamic")
-    try staged.write.mode(SaveMode.Overwrite).insertInto(table)
-    finally prev match {
-      case Some(v) => spark.conf.set(conf, v)
-      case None => spark.conf.unset(conf)
-    }
-    spark.catalog.refreshTable(table)
-  }
-
-  /** The ledgered bounded re-level skeleton, hoisted to ONE definition
-    * (r17 verdict #3: BandIndex and MediaSigStore carried
-    * near-identical ~25-line bodies; LexIndex's df re-level is the same
-    * shape) so the next stored family cannot fork the pattern:
-    *
-    *   1. `parts` — the ledger projected to the partition ints its keys
-    *      hash-confine to ([[touchedPartitions]], bounded by the table's
-    *      partition count, itself bounded by derivedBuckets);
-    *   2. ONE partition-pruned scan of exactly those partitions is
-    *      re-staged by the family's `stage` (recompute the per-key
-    *      level column via [[withKeyCount]]/withDf + re-stamp the
-    *      partition mirror + re-select the stored column order), staged
-    *      via localCheckpoint — the write plan must not scan its own
-    *      target;
-    *   3. dynamic-partition overwrite of exactly those partitions
-    *      ([[overwritePartitionsDynamic]] — per-writer option, catalog
-    *      refresh), untouched partitions byte-identical on disk;
-    *   4. the family's `clear` resets its ledger.
-    *
-    * Exactness argument (shared by every caller): a key's rows are
-    * hash-confined to its partition, so a level recomputed within the
-    * touched partitions is exact for every key they contain —
-    * including untouched co-partitioned keys, which re-level to the
-    * value they already carry. Returns partitions rewritten. Families
-    * whose re-level is NOT this shape (ContainIndex's oc leg — an
-    * audit against exact ground truth, because stored oc mixes
-    * vintages) compose [[overwritePartitionsDynamic]] directly.
-    */
-  private[ops] def relevelPartitions(spark: SparkSession, table: String,
-                                     parts: Seq[Int],
-                                     partCol: String,
-                                     stage: DataFrame => DataFrame,
-                                     clear: () => Unit): Long = {
-    if (parts.isEmpty) return 0L
-    val staged = stage(spark.table(table)
-        .filter(col(partCol).isin(parts: _*)))
-      .localCheckpoint()
-    overwritePartitionsDynamic(spark, staged, table)
-    clear()
-    parts.size.toLong
-  }
-
-  /** The partitions a family's ledger touches: distinct
-    * pmod(hash(ledger keys), nb), sorted — collected (bounded by nb).
-    * Ledger-grain work (batch vocabulary), no stored-table scan. Empty
-    * when the ledger does not exist.
-    */
-  private[ops] def touchedPartitions(spark: SparkSession, ledger: String,
-                                     nb: Int,
-                                     hashCols: Seq[String]): Seq[Int] =
-    if (!spark.catalog.tableExists(ledger)) Nil
-    else spark.table(ledger)
-      .select(expr(s"pmod(hash(${hashCols.mkString(", ")}), $nb)").cast("int"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
-
-  /** The re-level POLICY every family shares (the LexIndex.relevel
-    * shape — threshold measured on the pattern family,
-    * RELEVEL_r18.json): `partial` over the touched partitions below
-    * [[LexIndex.RelevelPartialMaxFraction]], `full` (returning the
-    * partitions it rewrote) at complete cover. The ledger is read ONCE:
-    * the touched-partition list gives the fraction by its size and is
-    * what the partial path rewrites. A missing ledger touches nothing
-    * (0.0); an unbucketed table counts as fully touched (1.0). Callers
-    * re-level one family after another, never concurrently: the
-    * partial path flips a session-global conf
-    * ([[overwritePartitionsDynamic]]). Returns (path, touched fraction,
-    * partitions rewritten).
-    */
-  private[ops] def relevelBy(spark: SparkSession, ledger: String,
-                             table: String, hashCols: Seq[String])(
-      partial: Seq[Int] => Long)(full: => Long): (String, Double, Long) = {
-    val nb = bucketsOf(spark, table)
-    val (f, parts) =
-      if (!spark.catalog.tableExists(ledger)) (0.0, Nil)
-      else if (nb == 0) (1.0, Nil)
-      else {
-        val ps = touchedPartitions(spark, ledger, nb, hashCols)
-        (ps.size.toDouble / nb, ps)
-      }
-    if (f < LexIndex.RelevelPartialMaxFraction) ("partial", f, partial(parts))
-    else ("full", f, full)
-  }
-
-  /** The family's re-level POLICY verb ([[relevelBy]]; the three
-    * mirrors share the same cost structure because their partial paths
-    * are [[relevelPartitions]] instances). Returns (path, touched
-    * fraction, partitions rewritten).
+  /** The family's re-level POLICY verb ([[BucketedStore.relevelBy]]).
+    * Returns (path, touched fraction, partitions rewritten).
     */
   def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
-    relevelBy(spark, s"${tag}_btouched", s"${tag}_bands", Seq("band", "bh"))(
-      parts => refreshBucketSizesPartial(spark, tag, parts)) {
-      refreshBucketSizes(spark, tag)
-      bucketsOf(spark, s"${tag}_bands").toLong
-    }
-
-  /** Ledger seeding for policy specs/benches — see
-    * [[LexIndex.seedTouchedForBench]]; production paths never call it.
-    */
-  private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
-                                         keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("band"), col("bh")).distinct()
-      .write.insertInto(s"${tag}_btouched")
-  }
-
-  /** Whether `table` is partitioned by `colName` — the artifact-VINTAGE
-    * half of every family's exists() check (r17 ADVICE): the
-    * append/delete/partial-re-level verbs require the partition-mirror
-    * columns (LexIndex pb, ContainIndex pb/pd, BandIndex/MediaSigStore
-    * pbk), so a pre-mirror vintage store must read as "not exists" and
-    * route through buildOrLoad's documented self-heal rebuild, rather
-    * than pass the maintenance gate and fail mid-verb with a
-    * missing-column AnalysisException.
-    */
-  private[ops] def partitionedBy(spark: SparkSession, table: String,
-                                 colName: String): Boolean =
-    spark.catalog.tableExists(table) &&
-      spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-        .partitionColumnNames.contains(colName)
+    BucketedStore.relevelBy(spark, touched(tag), bands(tag))(
+      parts => refreshBucketSizesPartial(spark, tag, parts))(
+      refreshBucketSizes(spark, tag))
 
   /** A catalog-safe table-name prefix for a corpus snapshot: sf dir +
     * role, lowercased, non-alphanumerics folded to `_`.
@@ -319,94 +175,42 @@ object BandIndex {
     ("graft_" + dir + "_" + role).toLowerCase
       .replaceAll("[^a-z0-9]+", "_").replaceAll("^_+", "")
 
-  /** The default (in-memory) catalog forgets tables across JVMs while
-    * their files persist in the warehouse dir; CTAS then refuses the
-    * occupied location. Drop stale locations so every fresh session
-    * rebuilds from current inputs. Shared by every stored-artifact
-    * builder (band index, span set).
-    */
-  private[ops] def dropStaleLocations(spark: SparkSession,
-                                      tables: Seq[String]): Unit =
-    for (t <- tables) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)))
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-
   /** Every table this family stores for `tag` — the one list reset
     * paths (q_takedown_audit) reuse so they cannot drift from the
     * storage layout (r16 ADVICE #2).
     */
   def tables(tag: String): Seq[String] =
-    Seq(s"${tag}_shingles", s"${tag}_bands", s"${tag}_btouched")
+    Seq(shingles(tag).name, bands(tag).name, touched(tag).name)
 
-  /** pbk partition column mirroring the (band, bh) bucket hash — the
-    * LexIndex withPb convention applied to this family (r17): a
-    * bucketed table can only be rewritten whole, but partitions can be
-    * dynamically overwritten one at a time, and since a (band, bh)
-    * bucket's rows are hash-confined to one pbk, bsz recomputed over a
-    * partition subset is EXACT for every bucket it contains. That is
-    * what makes [[refreshBucketSizesPartial]] a daily-batch-sized op
-    * instead of the O(index) [[refreshBucketSizes]] rewrite.
+  private def shingles(tag: String) = BucketedStore.Table(
+    s"${tag}_shingles", Seq("doc_id", "sh"), Seq("doc_id"))
+
+  /** The band table, partitioned by the pbk mirror of its (band, bh)
+    * bucket hash: bsz recomputed over a partition subset is EXACT for
+    * every bucket it contains — what makes [[refreshBucketSizesPartial]]
+    * a daily-batch-sized op instead of the O(index)
+    * [[refreshBucketSizes]] rewrite.
     */
-  private def withPbk(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pbk", expr(s"pmod(hash(band, bh), $nb)").cast("int"))
+  private def bands(tag: String) = BucketedStore.Table(s"${tag}_bands",
+    Seq("doc_id", "band", "bh", "bsz", "pbk"), Seq("band", "bh"), Some("pbk"))
 
-  private def writeBands(staged: DataFrame, nb: Int, table: String,
-                         cluster: Boolean = true): Unit = {
-    // r19 (§6, the LexIndex.writePostings rationale): cluster by the
-    // bucket key into nb partitions first — one file per bucket
-    // instead of (write tasks × buckets) fragments; at scale this is
-    // the hash write-distribution trade. Delete paths pass false
-    // (staged survivors are already bucket-aligned — §2.4).
-    val rows = staged.select("doc_id", "band", "bh", "bsz", "pbk")
-    (if (cluster) rows.repartition(nb, col("band"), col("bh")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pbk")
-      .bucketBy(nb, "band", "bh").sortBy("band", "bh")
-      .saveAsTable(table)
-  }
-
-  /** Touched-bucket ledger backing [[refreshBucketSizesPartial]] —
-    * the LexIndex pattern: appends/deletes record their batch's
-    * (band, bh) keys BEFORE the index mutates (a crash leaves only
-    * harmless extra rows; re-leveling an exact bucket is idempotent).
+  /** Touched-bucket ledger backing [[refreshBucketSizesPartial]]:
+    * appends/deletes record their batch's (band, bh) keys BEFORE the
+    * index mutates ([[BucketedStore]] crash order).
     */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = s"${tag}_btouched"
-    if (!spark.catalog.tableExists(tT)) {
-      dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[(Int, String)].toDF("band", "bh")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("band").cast("int"), col("bh").cast("string"))
-      .distinct().write.insertInto(s"${tag}_btouched")
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[(Int, String)].toDF("band", "bh")
-      .write.mode(SaveMode.Overwrite).saveAsTable(s"${tag}_btouched")
-    spark.catalog.refreshTable(s"${tag}_btouched")
-  }
+  private def touched(tag: String) =
+    BucketedStore.Ledger(s"${tag}_btouched", "band INT, bh STRING")
 
   /** Whether the stored index for `tag` is fully cataloged (the
     * IvfIndex convention — maintenance callers gate on this before
     * buildOrLoad erases the fresh-vs-pre-existing difference) AT the
     * current vintage: the band table must carry the r17 pbk partition
-    * mirror the maintenance verbs require ([[partitionedBy]]).
+    * mirror the maintenance verbs require
+    * ([[BucketedStore.partitionedBy]]).
     */
   def exists(spark: SparkSession, tag: String): Boolean =
     spark.catalog.tableExists(s"${tag}_shingles") &&
-      partitionedBy(spark, s"${tag}_bands", "pbk")
+      BucketedStore.partitionedBy(spark, s"${tag}_bands", "pbk")
 
   /** Materialize (or reuse, if already cataloged this session) the band
     * index for `standingDocs` (must carry doc_id + text). Returns
@@ -427,9 +231,8 @@ object BandIndex {
     // than breaking the partial re-level.
     val complete = exists(spark, tag)
     if (!complete) {
-      Seq(shT, bdT, s"${tag}_btouched").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      dropStaleLocations(spark, Seq(shT, bdT, s"${tag}_btouched"))
+      tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      BucketedStore.dropStaleLocations(spark, tables(tag))
       // Persist so the sizing count and the write share one shingling
       // pass; buckets derive from the family's primary relation (the
       // shingle rows — the band relation is strictly smaller at
@@ -438,21 +241,16 @@ object BandIndex {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val buckets = derivedBuckets(sh.count(), targetRowsPerBucket)
-        // repartition-by-bucket-key: one file per bucket (the
-        // writeBands/writePostings rationale)
-        sh.repartition(buckets, col("doc_id"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "doc_id").sortBy("doc_id")
-          .saveAsTable(shT)
+        shingles(tag).write(sh, buckets)
         // Bands derive from the stored shingles (one shingling pass
         // total); the bucket-size derivation runs ONCE here, at build
         // time — never again on the read path — and via the skew-safe
         // [[withKeyCount]], never a (band, bh) window.
-        writeBands(withPbk(
+        bands(tag).write(bands(tag).rows(
           withKeyCount(DedupQueries.bandsFromShingles(spark.table(shT)),
-            Seq("band", "bh"), "bsz"), buckets), buckets, bdT)
+            Seq("band", "bh"), "bsz"), buckets), buckets)
         // fresh build is exact everywhere — an empty touched ledger
-        ensureTouched(spark, tag)
+        touched(tag).ensure(spark)
       } finally sh.unpersist()
       // Readers cap hot buckets with `bsz <= HotBucketCap`; surface what
       // that cap will silently skip, once, at build time (the stored bsz
@@ -506,13 +304,11 @@ object BandIndex {
     val sh = DedupQueries.shingleRows(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val bands = DedupQueries.bandsFromShingles(sh)
+      val batch = DedupQueries.bandsFromShingles(sh)
       // ledger first (crash order), then the rows
-      recordTouched(spark, tag, bands.select("band", "bh"))
+      touched(tag).record(spark, batch)
       sh.write.insertInto(shT)
-      withPbk(withKeyCount(bands, Seq("band", "bh"), "bsz"), nb)
-        .select("doc_id", "band", "bh", "bsz", "pbk")
-        .write.insertInto(bdT)
+      bands(tag).insert(withKeyCount(batch, Seq("band", "bh"), "bsz"), nb)
     } finally sh.unpersist()
   }
 
@@ -531,50 +327,15 @@ object BandIndex {
     * rebuild-over-survivors exactly (BandIndexSpec differential on the
     * serving face). Both survivor relations are staged
     * (localCheckpoint), then the band table — written second at build —
-    * is dropped FIRST: a crash anywhere between leaves the both-tables
-    * gate broken → rebuild, never a shingles/bands mismatch (the
-    * IvfIndex split/merge write order). Returns (shingle rows removed,
-    * band rows removed).
-    * `beforeWrites` runs once the read-only counts are done, before
-    * the first write: a concurrent caller's write gate
-    * (`GovernanceQueries.parPhase`), which may abort the verb there.
+    * is dropped FIRST ([[BucketedStore.deleteBoth]]: the crash order
+    * and the `beforeWrites` gate). Returns (shingle rows removed, band
+    * rows removed).
     */
   def delete(spark: SparkSession, docIds: DataFrame,
              tag: String,
-             beforeWrites: () => Unit = () => ()): (Long, Long) = {
-    val shT = s"${tag}_shingles"
-    val bdT = s"${tag}_bands"
-    require(spark.catalog.tableExists(shT) && spark.catalog.tableExists(bdT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = takedownIds(spark, docIds, "doc_id")
-    val sh = spark.table(shT)
-    val bd = spark.table(bdT)
-    val shRemoved = sh.join(ids, Seq("doc_id"), "left_semi").count()
-    val bdRemoved = bd.join(ids, Seq("doc_id"), "left_semi").count()
-    if (shRemoved == 0L && bdRemoved == 0L) return (0L, 0L)
-    beforeWrites()
-    // ledger first (crash order): the deleted docs' buckets are exactly
-    // the keys whose surviving bsz is about to go stale
-    recordTouched(spark, tag,
-      bd.join(ids, Seq("doc_id"), "left_semi").select("band", "bh"))
-    val shBuckets = bucketsOf(spark, shT)
-    val bdBuckets = bucketsOf(spark, bdT)
-    val stagedSh = sh.join(ids, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val stagedBd = bd.join(ids, Seq("doc_id"), "left_anti")
-      .select("doc_id", "band", "bh", "bsz", "pbk")
-      .localCheckpoint()
-    spark.sql(s"DROP TABLE IF EXISTS $bdT")
-    // no re-clustering: both staged sides are narrow anti-joins of the
-    // bucketed scans, already one aligned partition per bucket
-    stagedSh.write.mode(SaveMode.Overwrite)
-      .bucketBy(shBuckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(shT)
-    writeBands(stagedBd, bdBuckets, bdT, cluster = false)
-    spark.catalog.refreshTable(shT)
-    spark.catalog.refreshTable(bdT)
-    (shRemoved, bdRemoved)
-  }
+             beforeWrites: () => Unit = () => ()): (Long, Long) =
+    BucketedStore.deleteBoth(spark, docIds, tag, shingles(tag), bands(tag),
+      touched(tag), bands(tag), beforeWrites)
 
   /** Periodic compaction: rebuild the band table from the shingle store
     * with exact bucket sizes (appends leave bsz a per-batch lower
@@ -590,12 +351,12 @@ object BandIndex {
     // Preserve the family's bucket spec (derived at build): a refresh
     // compacts content, it must not silently re-spec the layout.
     val buckets = bucketsOf(spark, bdT)
-    writeBands(withPbk(
+    bands(tag).write(bands(tag).rows(
       withKeyCount(DedupQueries.bandsFromShingles(spark.table(shT)),
-        Seq("band", "bh"), "bsz"), buckets), buckets, bdT)
+        Seq("band", "bh"), "bsz"), buckets), buckets)
     spark.catalog.refreshTable(bdT)
     // everything is exact again — the ledger resets
-    clearTouched(spark, tag)
+    touched(tag).clear(spark)
   }
 
   /** BOUNDED bsz re-level (r17 — the LexIndex refreshCountsPartial
@@ -613,19 +374,18 @@ object BandIndex {
     * touched by the batch's buckets). Returns partitions rewritten.
     */
   def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long =
-    refreshBucketSizesPartial(spark, tag, touchedPartitions(spark,
-      s"${tag}_btouched", bucketsOf(spark, s"${tag}_bands"), Seq("band", "bh")))
+    refreshBucketSizesPartial(spark, tag, BucketedStore.touchedPartitions(
+      spark, touched(tag), bands(tag), bucketsOf(spark, s"${tag}_bands")))
 
   private def refreshBucketSizesPartial(spark: SparkSession, tag: String,
                                         parts: Seq[Int]): Long = {
-    val bdT = s"${tag}_bands"
-    ensureTouched(spark, tag)
-    val nb = bucketsOf(spark, bdT)
-    relevelPartitions(spark, bdT, parts, "pbk",
-      scan => withPbk(withKeyCount(
+    val bd = bands(tag)
+    touched(tag).ensure(spark)
+    val nb = bucketsOf(spark, bd.name)
+    BucketedStore.relevelPartitions(spark, bd, parts,
+      scan => bd.rows(withKeyCount(
           scan.select(col("doc_id"), col("band"), col("bh")),
-          Seq("band", "bh"), "bsz"), nb)
-        .select("doc_id", "band", "bh", "bsz", "pbk"),
-      () => clearTouched(spark, tag))
+          Seq("band", "bh"), "bsz"), nb),
+      () => touched(tag).clear(spark))
   }
 }

@@ -55,7 +55,9 @@ object BpeStore {
     BandIndex.tag(dir, s"bpe$merges")
 
   private def mergesT(tag: String) = s"${tag}_bpemerges"
-  private def segsT(tag: String) = s"${tag}_bpesegs"
+  private def segsT(tag: String) = segs(tag).name
+  private def segs(tag: String) = BucketedStore.Table(s"${tag}_bpesegs",
+    Seq("word", "cnt", "syms"), Seq("word"))
 
   /** Every table this family stores for `tag` (r16 ADVICE #2: reset
     * paths reuse this so they cannot drift from the layout).
@@ -79,18 +81,14 @@ object BpeStore {
     // crash between writes or an external drop of either table —
     // self-heals by rebuilding.
     if (!(spark.catalog.tableExists(mT) && spark.catalog.tableExists(sT))) {
-      BandIndex.dropStaleLocations(spark, Seq(mT, sT))
+      BucketedStore.dropStaleLocations(spark, Seq(mT, sT))
       val (merges, vFinal) = BpeQueries.learnAndApplyDocs(docs, numMerges)
       try {
         import spark.implicits._
         merges.toDF("merge_rank", "lhs", "rhs", "pair_count")
           .write.mode(SaveMode.Overwrite).saveAsTable(mT)
         val buckets = BandIndex.derivedBuckets(vFinal.count())
-        // repartition-by-bucket-key: one file per bucket (r19 §6)
-        vFinal.repartition(buckets, col("word"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "word").sortBy("word")
-          .saveAsTable(sT)
+        segs(tag).write(vFinal, buckets)
       } finally { vFinal.unpersist(); Checkpoints.free(vFinal) }
       // Build-time audit: the numbers that decide whether the merge
       // table is worth shipping (q_bpe_encode's metrics, as a log line).

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored chunk table — the fourth stored-artifact family (after
@@ -37,7 +37,10 @@ object ChunkStore {
 
   def tag(dir: String): String = BandIndex.tag(dir, "chunks")
 
-  private def chunksT(tag: String) = s"${tag}_chunks"
+  private def chunksT(tag: String) = chunks(tag).name
+  private def chunks(tag: String) = BucketedStore.Table(s"${tag}_chunks",
+    Seq("doc_id", "chunk_idx", "start_tok", "n_chunk_tok", "chunk_fp"),
+    Seq("chunk_fp"))
 
   /** Every table this family stores for `tag` (r16 ADVICE #2: reset
     * paths reuse this so they cannot drift from the layout).
@@ -64,7 +67,7 @@ object ChunkStore {
                  ): DataFrame = {
     val cT = chunksT(tag)
     if (!spark.catalog.tableExists(cT)) {
-      BandIndex.dropStaleLocations(spark, Seq(cT))
+      BucketedStore.dropStaleLocations(spark, Seq(cT))
       // Persist so the sizing count and the write share one chunking
       // pass (the build's only corpus scan).
       val rows = PackingQueries.chunkRowsOf(docs)
@@ -72,12 +75,7 @@ object ChunkStore {
       try {
         val n = rows.count()
         val bk = BandIndex.derivedBuckets(n, targetRowsPerBucket)
-        // repartition-by-bucket-key: one file per bucket (the
-        // LexIndex.writePostings rationale, r19 §6)
-        rows.repartition(bk, col("chunk_fp"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(bk, "chunk_fp").sortBy("chunk_fp")
-          .saveAsTable(cT)
+        chunks(tag).write(rows, bk)
         // Build-time audit (the families' convention): how much of the
         // chunk space is already duplicated — the fraction of embedding
         // spend dedup will save.
@@ -150,13 +148,10 @@ object ChunkStore {
     beforeWrites()
     val buckets = BandIndex.bucketsOf(spark, cT)
     val staged = t.join(ids, Seq("doc_id"), "left_anti")
-      .select("doc_id", "chunk_idx", "start_tok", "n_chunk_tok", "chunk_fp")
+      .select(chunks(tag).cols.map(col): _*)
       .localCheckpoint()
-    // no re-clustering (r19 §2.4): staged survivors come from a
-    // narrow anti-join of the bucketed scan — already bucket-aligned
-    staged.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "chunk_fp").sortBy("chunk_fp")
-      .saveAsTable(cT)
+    // no re-clustering: staged survivors are bucket-aligned
+    chunks(tag).write(staged, buckets, cluster = false)
     spark.catalog.refreshTable(cT)
     removed
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored containment index — the SIXTH stored artifact family (after
@@ -13,19 +13,19 @@ import org.apache.spark.sql.functions._
   * Two bucketed tables (plus a tiny ledger) per corpus snapshot:
   *
   *   - `<tag>_cngrams` (g1, doc_id, na, df)   bucketed by g1,
-  *     partitioned by pb = pmod(hash(g1), nb) — the LexIndex pb
-  *     mirror: a g1's rows are hash-confined to one partition, so
-  *     df recomputed within a partition subset is EXACT for every
-  *     g1 it contains, which is what makes [[refreshCountsPartial]]
-  *     a bounded maintenance op (r16 verdict #4)
+  *     partitioned by the pb mirror of the g1 bucket
+  *     ([[BucketedStore]]): a g1's rows are hash-confined to one
+  *     partition, so df recomputed within a partition subset is
+  *     EXACT for every g1 it contains, which is what makes
+  *     [[refreshCountsPartial]] a bounded maintenance op (r16 verdict #4)
   *   - `<tag>_cdocs`   (doc_id, ng, na, oc)   bucketed by doc_id,
-  *     partitioned by pd = pmod(hash(doc_id), nb) — same idea at doc
-  *     grain, so the oc re-level rewrites only partitions holding
+  *     partitioned by the pd mirror of the doc_id bucket — same idea
+  *     at doc grain, so the oc re-level rewrites only partitions holding
   *     docs whose oc actually changed
   *   - `<tag>_ctouched` (g1) — the touched-n-gram ledger [[append]]
   *     and [[delete]] maintain (recorded BEFORE mutation, the
-  *     LexIndex crash-order), [[refreshCounts]]/[[refreshCountsPartial]]
-  *     reset
+  *     [[BucketedStore]] crash order), [[refreshCounts]]/
+  *     [[refreshCountsPartial]] reset
   *
   * `df` — each n-gram's standing document frequency — and `oc` — each
   * doc's count of OVER-CAP n-grams — are PRECOMPUTED at build time, so
@@ -50,81 +50,24 @@ object ContainIndex {
     */
   def tag(dir: String, role: String): String = BandIndex.tag(dir, role)
 
-  private def ngramT(tag: String) = s"${tag}_cngrams"
-  private def docT(tag: String) = s"${tag}_cdocs"
-  private def touchT(tag: String) = s"${tag}_ctouched"
+  private def ngramT(tag: String) = ngrams(tag).name
+  private def docT(tag: String) = docs(tag).name
+
+  private def ngrams(tag: String) = BucketedStore.Table(s"${tag}_cngrams",
+    Seq("g1", "doc_id", "na", "df", "pb"), Seq("g1"), Some("pb"))
+  private def docs(tag: String) = BucketedStore.Table(s"${tag}_cdocs",
+    Seq("doc_id", "ng", "na", "oc", "pd"), Seq("doc_id"), Some("pd"))
+
+  /** Touched-n-gram ledger ([[BucketedStore]] crash order). */
+  private def touched(tag: String) =
+    BucketedStore.Ledger(s"${tag}_ctouched", "g1 STRING")
 
   /** Every table this family stores for `tag` — the one list reset
     * paths (q_takedown_audit) and drop helpers reuse so they cannot
     * drift from the storage layout (r16 ADVICE #2).
     */
   def tables(tag: String): Seq[String] =
-    Seq(ngramT(tag), docT(tag), touchT(tag))
-
-  /** Drop every stored table of `tag` (catalog + files). */
-  def dropAll(spark: SparkSession, tag: String): Unit = {
-    tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    BandIndex.dropStaleLocations(spark, tables(tag))
-  }
-
-  /** pb/pd partition columns mirroring the bucket hash (the LexIndex
-    * withPb convention — see that scaladoc for why a bucketed table
-    * needs a partition mirror to be partially rewritable).
-    */
-  private def withPg(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pb", expr(s"pmod(hash(g1), $nb)").cast("int"))
-  private def withPd(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pd", expr(s"pmod(hash(doc_id), $nb)").cast("int"))
-
-  // r19 (§6, the LexIndex.writePostings rationale): one file per
-  // bucket via bucket-key clustering; deletes pass false (§2.4)
-  private def writePostings(staged: DataFrame, nb: Int,
-                            table: String, cluster: Boolean = true): Unit = {
-    val rows = staged.select("g1", "doc_id", "na", "df", "pb")
-    (if (cluster) rows.repartition(nb, col("g1")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pb")
-      .bucketBy(nb, "g1").sortBy("g1")
-      .saveAsTable(table)
-  }
-
-  private def writeDocs(staged: DataFrame, nb: Int, table: String,
-                        cluster: Boolean = true): Unit = {
-    val rows = staged.select("doc_id", "ng", "na", "oc", "pd")
-    (if (cluster) rows.repartition(nb, col("doc_id")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pd")
-      .bucketBy(nb, "doc_id").sortBy("doc_id")
-      .saveAsTable(table)
-  }
-
-  /** Touched-n-gram ledger (the LexIndex pattern verbatim): recorded
-    * BEFORE the index mutates, so a crash between the two leaves only
-    * harmless extra ledger rows (a partial re-level of an already-exact
-    * partition is idempotent), never a stale n-gram the ledger missed.
-    */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = touchT(tag)
-    if (!spark.catalog.tableExists(tT)) {
-      BandIndex.dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[String].toDF("g1")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            grams: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    grams.select(col("g1")).distinct().write.insertInto(touchT(tag))
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[String].toDF("g1")
-      .write.mode(SaveMode.Overwrite).saveAsTable(touchT(tag))
-    spark.catalog.refreshTable(touchT(tag))
-  }
+    Seq(ngramT(tag), docT(tag), touched(tag).name)
 
   /** Materialize (or reuse, if already cataloged this session) the
     * containment index for `standingDocs` (must carry doc_id + text).
@@ -146,9 +89,8 @@ object ContainIndex {
     // metadata, so the two predicates cannot disagree
     val complete = exists(spark, tag)
     if (!complete) {
-      Seq(ngT, dcT, touchT(tag)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      BandIndex.dropStaleLocations(spark, Seq(ngT, dcT, touchT(tag)))
+      tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      BucketedStore.dropStaleLocations(spark, tables(tag))
       val g = DedupQueries.ngramDocs(standingDocs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -163,18 +105,17 @@ object ContainIndex {
         try {
           val buckets =
             BandIndex.derivedBuckets(post.count(), targetRowsPerBucket)
-          writePostings(withPg(post, buckets), buckets, ngT)
+          ngrams(tag).write(ngrams(tag).rows(post, buckets), buckets)
           // per-doc over-cap count from the SAME df relation, joined
           // back to the arrays; docs whose n-grams are all rare get 0
           val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
             .groupBy("doc_id").agg(count(lit(1)).as("oc"))
-          writeDocs(withPd(
+          docs(tag).write(docs(tag).rows(
             g.join(oc, Seq("doc_id"), "left")
               .select(col("doc_id"), col("ng"), size(col("ng")).as("na"),
-                coalesce(col("oc"), lit(0L)).as("oc")), buckets),
-            buckets, dcT)
+                coalesce(col("oc"), lit(0L)).as("oc")), buckets), buckets)
           // fresh build is exact everywhere — an empty touched ledger
-          ensureTouched(spark, tag)
+          touched(tag).ensure(spark)
         } finally post.unpersist()
       } finally g.unpersist()
     }
@@ -201,17 +142,14 @@ object ContainIndex {
         explode(col("ng")).as("g1"))
       // ledger first (crash order: extra ledger rows are harmless,
       // missed ones are not), then the postings
-      recordTouched(spark, tag, inv.select("g1"))
+      touched(tag).record(spark, inv)
       val post = BandIndex.withKeyCount(inv, Seq("g1"), "df")
-      withPg(post, nb).select("g1", "doc_id", "na", "df", "pb")
-        .write.insertInto(ngT)
+      ngrams(tag).insert(post, nb)
       val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
         .groupBy("doc_id").agg(count(lit(1)).as("oc"))
-      withPd(g.join(oc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("ng"), size(col("ng")).as("na"),
-            coalesce(col("oc"), lit(0L)).as("oc")), nb)
-        .select("doc_id", "ng", "na", "oc", "pd")
-        .write.insertInto(dcT)
+      docs(tag).insert(g.join(oc, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("ng"), size(col("ng")).as("na"),
+          coalesce(col("oc"), lit(0L)).as("oc")), nb)
     } finally g.unpersist()
   }
 
@@ -231,23 +169,22 @@ object ContainIndex {
         Seq("g1"), "df")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val stagedNg = withPg(post, buckets)
-        .select("g1", "doc_id", "na", "df", "pb")
+      val stagedNg = ngrams(tag).rows(post, buckets)
         .localCheckpoint() // sever from the table being overwritten
       val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
         .groupBy("doc_id").agg(count(lit(1)).as("oc"))
-      val stagedDc = withPd(spark.table(dcT).select("doc_id", "ng", "na")
+      val stagedDc = docs(tag).rows(spark.table(dcT)
+          .select("doc_id", "ng", "na")
           .join(oc, Seq("doc_id"), "left")
           .select(col("doc_id"), col("ng"), col("na"),
             coalesce(col("oc"), lit(0L)).as("oc")), buckets)
-        .select("doc_id", "ng", "na", "oc", "pd")
         .localCheckpoint()
-      writePostings(stagedNg, buckets, ngT)
-      writeDocs(stagedDc, buckets, dcT)
+      ngrams(tag).write(stagedNg, buckets)
+      docs(tag).write(stagedDc, buckets)
       spark.catalog.refreshTable(ngT)
       spark.catalog.refreshTable(dcT)
       // everything is exact again — the ledger resets
-      clearTouched(spark, tag)
+      touched(tag).clear(spark)
     } finally post.unpersist()
   }
 
@@ -261,7 +198,7 @@ object ContainIndex {
     * tables; this does daily-batch-proportional posting work plus a
     * scan-grade oc audit:
     *
-    *   1. touched g1s → their partitions pb = pmod(hash(g1), nb); ONE
+    *   1. touched g1s → their pb mirror partitions; ONE
     *      partition-pruned scan re-derives df exactly (a g1's rows are
     *      hash-confined to its pb) and dynamic-overwrites exactly those
     *      partitions (staged via localCheckpoint);
@@ -282,26 +219,25 @@ object ContainIndex {
     * rewritten, doc partitions rewritten).
     */
   def refreshCountsPartial(spark: SparkSession, tag: String): (Long, Long) =
-    refreshCountsPartial(spark, tag, BandIndex.touchedPartitions(spark,
-      touchT(tag), BandIndex.bucketsOf(spark, ngramT(tag)), Seq("g1")))
+    refreshCountsPartial(spark, tag, BucketedStore.touchedPartitions(spark,
+      touched(tag), ngrams(tag), BandIndex.bucketsOf(spark, ngramT(tag))))
 
   private def refreshCountsPartial(spark: SparkSession, tag: String,
                                    touchedPbs: Seq[Int]): (Long, Long) = {
     val ngT = ngramT(tag)
     val dcT = docT(tag)
-    ensureTouched(spark, tag)
+    touched(tag).ensure(spark)
     val nb = BandIndex.bucketsOf(spark, ngT)
     if (touchedPbs.isEmpty) return (0L, 0L)
     // 1. posting df re-level, partition-pruned (the
-    // BandIndex.relevelPartitions shape, inlined because leg 2 below
+    // BucketedStore.relevelPartitions shape, inlined because leg 2 below
     // is NOT that shape and the ledger must only clear after BOTH)
-    val stagedNg = withPg(BandIndex.withKeyCount(
+    val stagedNg = ngrams(tag).rows(BandIndex.withKeyCount(
         spark.table(ngT).filter(col("pb").isin(touchedPbs: _*))
           .select(col("g1"), col("doc_id"), col("na")),
         Seq("g1"), "df"), nb)
-      .select("g1", "doc_id", "na", "df", "pb")
       .localCheckpoint()
-    BandIndex.overwritePartitionsDynamic(spark, stagedNg, ngT)
+    BucketedStore.overwritePartitionsDynamic(spark, stagedNg, ngT)
     // 2. oc re-level: exact over-cap counts off the now-exact df
     val ocExact = spark.table(ngT)
       .filter(col("df") > DedupQueries.ContainDfCap)
@@ -319,35 +255,21 @@ object ContainIndex {
         .select(col("doc_id"), col("ng"), col("na"),
           coalesce(col("oc_x"), lit(0L)).as("oc"), col("pd"))
         .localCheckpoint()
-      BandIndex.overwritePartitionsDynamic(spark, stagedDc, dcT)
+      BucketedStore.overwritePartitionsDynamic(spark, stagedDc, dcT)
     }
-    clearTouched(spark, tag)
+    touched(tag).clear(spark)
     (touchedPbs.size.toLong, changedPds.size.toLong)
   }
 
-  /** The family's re-level POLICY verb (the LexIndex.relevel shape —
-    * threshold measured on the pattern family, RELEVEL_r18.json):
-    * partial below [[LexIndex.RelevelPartialMaxFraction]], full at
-    * complete cover. Returns (path, touched fraction, partitions
-    * rewritten — posting + doc partitions summed for the partial path).
+  /** The family's re-level POLICY verb ([[BucketedStore.relevelBy]]).
+    * Returns (path, touched fraction, partitions rewritten — posting +
+    * doc partitions summed for the partial path).
     */
   def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
-    BandIndex.relevelBy(spark, touchT(tag), ngramT(tag), Seq("g1")) { parts =>
+    BucketedStore.relevelBy(spark, touched(tag), ngrams(tag)) { parts =>
       val (ng, dc) = refreshCountsPartial(spark, tag, parts)
       ng + dc
-    } {
-      refreshCounts(spark, tag)
-      BandIndex.bucketsOf(spark, ngramT(tag)).toLong
-    }
-
-  /** Ledger seeding for policy specs/benches — see
-    * [[LexIndex.seedTouchedForBench]]; production paths never call it.
-    */
-  private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
-                                         keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("g1")).distinct().write.insertInto(touchT(tag))
-  }
+    }(refreshCounts(spark, tag))
 
   /** Takedown maintenance (r15 verdict #1, dual of [[append]]): remove
     * every posting and doc-array row of `docIds`. A deleted doc can
@@ -366,47 +288,16 @@ object ContainIndex {
     * [[refreshCounts]] re-levels both, after which [[probe]] ==
     * rebuild-over-survivors exactly (ContainIndexSpec differential on
     * the serving face). Survivors staged (localCheckpoint); the
-    * doc-array table — written second at build — drops FIRST so a
-    * crash between the writes breaks the both-tables gate into a
-    * rebuild (the IvfIndex split/merge write order). Returns
-    * (posting rows removed, doc-array rows removed).
-    * `beforeWrites` runs once the read-only counts are done, before
-    * the first write: a concurrent caller's write gate
-    * (`GovernanceQueries.parPhase`), which may abort the verb there.
+    * doc-array table — written second at build — drops FIRST
+    * ([[BucketedStore.deleteBoth]]: the crash order and the
+    * `beforeWrites` gate). Returns (posting rows removed, doc-array
+    * rows removed).
     */
   def delete(spark: SparkSession, docIds: DataFrame,
              tag: String,
-             beforeWrites: () => Unit = () => ()): (Long, Long) = {
-    val ngT = ngramT(tag)
-    val dcT = docT(tag)
-    require(spark.catalog.tableExists(ngT) && spark.catalog.tableExists(dcT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
-    val ng = spark.table(ngT)
-    val dc = spark.table(dcT)
-    val ngRemoved = ng.join(ids, Seq("doc_id"), "left_semi").count()
-    val dcRemoved = dc.join(ids, Seq("doc_id"), "left_semi").count()
-    if (ngRemoved == 0L && dcRemoved == 0L) return (0L, 0L)
-    beforeWrites()
-    // ledger first (crash order): the deleted docs' n-grams are exactly
-    // the keys whose surviving df is about to go stale
-    recordTouched(spark, tag,
-      ng.join(ids, Seq("doc_id"), "left_semi").select("g1"))
-    val buckets = BandIndex.bucketsOf(spark, ngT)
-    val stagedNg = ng.join(ids, Seq("doc_id"), "left_anti")
-      .select("g1", "doc_id", "na", "df", "pb")
-      .localCheckpoint()
-    val stagedDc = dc.join(ids, Seq("doc_id"), "left_anti")
-      .select("doc_id", "ng", "na", "oc", "pd")
-      .localCheckpoint()
-    spark.sql(s"DROP TABLE IF EXISTS $dcT")
-    // no re-clustering: staged survivors are bucket-aligned (§2.4)
-    writePostings(stagedNg, buckets, ngT, cluster = false)
-    writeDocs(stagedDc, buckets, dcT, cluster = false)
-    spark.catalog.refreshTable(ngT)
-    spark.catalog.refreshTable(dcT)
-    (ngRemoved, dcRemoved)
-  }
+             beforeWrites: () => Unit = () => ()): (Long, Long) =
+    BucketedStore.deleteBoth(spark, docIds, tag, ngrams(tag), docs(tag),
+      touched(tag), ngrams(tag), beforeWrites)
 
   /** What the df cap silently excludes from candidate generation on
     * the stored index: (over-cap distinct n-grams, posting rows inside
@@ -433,12 +324,12 @@ object ContainIndex {
   /** Whether the stored index for `tag` is fully cataloged (the
     * IvfIndex convention) AT the current vintage: both tables must
     * carry the r17 pb/pd partition mirrors the maintenance verbs
-    * require ([[BandIndex.partitionedBy]]) — a pre-mirror store reads
-    * as absent and self-heals via buildOrLoad.
+    * require ([[BucketedStore.partitionedBy]]) — a pre-mirror store
+    * reads as absent and self-heals via buildOrLoad.
     */
   def exists(spark: SparkSession, tag: String): Boolean =
-    BandIndex.partitionedBy(spark, ngramT(tag), "pb") &&
-      BandIndex.partitionedBy(spark, docT(tag), "pd")
+    BucketedStore.partitionedBy(spark, ngramT(tag), "pb") &&
+      BucketedStore.partitionedBy(spark, docT(tag), "pd")
 
   /** The probe — ONE definition shared by the declared incremental
     * query and the streaming ingest face, so batch and stream cannot

@@ -37,7 +37,9 @@ object IvfIndex {
   def tag(dir: String, nCells: Int): String =
     BandIndex.tag(dir, s"ivf$nCells")
 
-  private def cellsT(tag: String) = s"${tag}_ivfcells"
+  private def cellsT(tag: String) = cellTable(tag).name
+  private def cellTable(tag: String) = BucketedStore.Table(s"${tag}_ivfcells",
+    Seq("vec_id", "v", "nrm", "cell"), Seq("cell"))
   private def centT(tag: String) = s"${tag}_ivfcentroids"
 
   /** Every table this family stores for `tag` (r16 ADVICE #2: reset
@@ -117,17 +119,12 @@ object IvfIndex {
     // self-heal fix, applied to the one other family that writes its
     // gate table first).
     if (!(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT))) {
-      BandIndex.dropStaleLocations(spark, Seq(cT, mT))
+      BucketedStore.dropStaleLocations(spark, Seq(cT, mT))
       val vecs = vectors
       val buckets = BandIndex.derivedBuckets(
         if (nRows != null) nRows() else vecs.count(), targetRowsPerBucket)
       val (a2, centn) = SimilarityQueries.buildIvf(vecs, nCells)
-      // repartition-by-bucket-key: one file per bucket (r19 §6,
-      // the LexIndex.writePostings rationale)
-      a2.repartition(buckets, col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell").sortBy("cell")
-        .saveAsTable(cT)
+      cellTable(t).write(a2, buckets)
       centn.write.mode(SaveMode.Overwrite).saveAsTable(mT)
       // Build-time audit: list balance decides probe cost — a corpus
       // collapsing into few cells quantizes badly and deserves a loud
@@ -307,10 +304,7 @@ object IvfIndex {
       // present but inconsistent (child rows without centroids), a
       // corruption no existence gate can see.
       spark.sql(s"DROP TABLE IF EXISTS $mT")
-      stagedCells.repartition(buckets, col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell").sortBy("cell")
-        .saveAsTable(cT)
+      cellTable(tag).write(stagedCells, buckets)
       stagedCents.write.mode(SaveMode.Overwrite).saveAsTable(mT)
       spark.catalog.refreshTable(cT)
       spark.catalog.refreshTable(mT)
@@ -418,10 +412,7 @@ object IvfIndex {
         .localCheckpoint()
       val stagedCents = survCents.localCheckpoint()
       spark.sql(s"DROP TABLE IF EXISTS $mT")
-      stagedCells.repartition(buckets, col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell").sortBy("cell")
-        .saveAsTable(cT)
+      cellTable(tag).write(stagedCells, buckets)
       stagedCents.write.mode(SaveMode.Overwrite).saveAsTable(mT)
       spark.catalog.refreshTable(cT)
       spark.catalog.refreshTable(mT)
@@ -459,19 +450,16 @@ object IvfIndex {
     require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
       s"delete target $tag does not exist — buildOrLoad first")
     val ids = BandIndex.takedownIds(spark, vecIds, "vec_id")
-    val cells = spark.table(cT)
-    val removed = cells.join(ids, Seq("vec_id"), "left_semi").count()
+    val stored = spark.table(cT)
+    val removed = stored.join(ids, Seq("vec_id"), "left_semi").count()
     if (removed == 0L) return 0L
     beforeWrites()
     val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = cells.join(ids, Seq("vec_id"), "left_anti")
-      .select("vec_id", "v", "nrm", "cell")
+    val staged = stored.join(ids, Seq("vec_id"), "left_anti")
+      .select(cellTable(tag).cols.map(col): _*)
       .localCheckpoint()
-    // no re-clustering (r19 §2.4): staged survivors come from a
-    // narrow anti-join of the bucketed scan — already bucket-aligned
-    staged.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .saveAsTable(cT)
+    // no re-clustering: staged survivors are bucket-aligned
+    cellTable(tag).write(staged, buckets, cluster = false)
     spark.catalog.refreshTable(cT)
     removed
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * tables since r9). The classic inverted index, Spark-shaped:
   *
   *   - `<tag>_lpost`  (term, doc_id, tf, dl, df, pb) bucketed by term
-  *     AND partitioned by pb = pmod(hash(term), buckets) — the
+  *     AND partitioned by the pb mirror of the term's bucket — the
   *     postings. `df` (the term's document frequency) is PRECOMPUTED
   *     at build via ONE skew-safe aggregation over the posting key and
   *     stored ON each posting row (the BandIndex `bsz` / ContainIndex
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     read path; `dl` (the posting doc's token length) rides along so
   *     scoring never joins back to the corpus; `pb` mirrors the bucket
   *     hash so single BUCKETS can be rewritten via dynamic-partition
-  *     overwrite (see [[withPb]] / [[refreshCountsPartial]]).
+  *     overwrite (see [[postings]] / [[refreshCountsPartial]]).
   *   - `<tag>_lstats` (n_docs, sum_dl) — the 1-row corpus statistics
   *     (N and Σdl for avgdl), computed over the FULL corpus at build
   *     (docs containing no query term still shape avgdl).
@@ -99,16 +99,15 @@ object LexIndex {
 
   def tag(dir: String): String = BandIndex.tag(dir, "lex")
 
-  private def postT(tag: String) = s"${tag}_lpost"
+  private def postT(tag: String) = postings(tag).name
   private def statsT(tag: String) = s"${tag}_lstats"
-  private def touchT(tag: String) = s"${tag}_ltouched"
 
   /** Every table this family stores for `tag` — the one list reset
     * paths (q_takedown_audit) reuse so they cannot drift from the
     * storage layout (r16 ADVICE #2).
     */
   def tables(tag: String): Seq[String] =
-    Seq(postT(tag), statsT(tag), touchT(tag))
+    Seq(postT(tag), statsT(tag), touched(tag).name)
 
   def buckets(spark: SparkSession, tag: String): Int =
     BandIndex.bucketsOf(spark, postT(tag))
@@ -116,92 +115,38 @@ object LexIndex {
   /** Whether the stored index for `tag` is fully cataloged (the
     * IvfIndex convention) AT the current vintage: the posting table
     * must carry the r16 pb partition mirror the maintenance verbs
-    * require ([[BandIndex.partitionedBy]]) — a pre-mirror store reads
-    * as absent and self-heals via buildOrLoad.
+    * require ([[BucketedStore.partitionedBy]]) — a pre-mirror store
+    * reads as absent and self-heals via buildOrLoad.
     */
   def exists(spark: SparkSession, tag: String): Boolean =
-    BandIndex.partitionedBy(spark, postT(tag), "pb") &&
+    BucketedStore.partitionedBy(spark, postT(tag), "pb") &&
       spark.catalog.tableExists(statsT(tag))
 
-  /** The posting table's partition column: pb = pmod(hash(term), nb),
-    * the SAME Murmur3(seed 42) + pmod expression Spark's bucketing
-    * routes `term` with, so partition pb=k holds exactly bucket k's
-    * rows (one bucket file per partition — total file count unchanged
-    * vs an unpartitioned bucketed table). Why partition at all: a
-    * bucketed table can only be rewritten WHOLE, but partitions can be
-    * dynamically overwritten one at a time — and since a term's rows
-    * are hash-confined to one pb, recomputing df over a subset of
-    * partitions is EXACT for every term they contain. That is what
-    * makes [[refreshCountsPartial]] a bounded maintenance op (rewrite
-    * only the buckets holding terms touched since the last exact
-    * level, untouched buckets byte-identical) instead of a full-table
-    * rewrite — at this family's 10^12-posting target scale the
-    * difference between the two is the costliest maintenance op in
-    * the repo vs a daily-batch-sized one (r15 verdict #4). Correctness
-    * does not depend on the hash equality — pb is its own stored
-    * column, written and pruned by literal predicates; the equality
-    * only keeps the one-file-per-partition layout.
+  /** The posting table, partitioned by the pb mirror of its term
+    * bucket ([[BucketedStore]]: a mirror partition equals its bucket).
+    * Why partition at all: a term's rows are hash-confined to one pb,
+    * so recomputing df over a subset of partitions is EXACT for every
+    * term they contain. That is what makes [[refreshCountsPartial]] a
+    * bounded maintenance op (rewrite only the buckets holding terms
+    * touched since the last exact level, untouched buckets
+    * byte-identical) instead of a full-table rewrite — at this
+    * family's 10^12-posting target scale the difference between the
+    * two is the costliest maintenance op in the repo vs a
+    * daily-batch-sized one (r15 verdict #4).
     */
-  private def withPb(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pb", expr(s"pmod(hash(term), $nb)").cast("int"))
-
-  /** r19 (§6 output file sizing / §2.4): `cluster` repartitions by
-    * the bucket key into exactly nb partitions before the bucketed
-    * write. Spark's bucket id and HashPartitioning use the same
-    * murmur3 pmod, so each write task then holds exactly one bucket —
-    * ONE file per bucket instead of (write tasks × buckets) fragments.
-    * Locally this cuts the commit protocol's file count ~tasks-fold
-    * (q_takedown_audit's dominant cost — the r19 c8-vs-c32 record
-    * shows its writes were overhead-bound); at scale it is the
-    * write.distribution-mode=hash trade: one shuffle of the staged
-    * rows buys right-sized files. Delete paths pass cluster = false:
-    * their staged survivors come from a narrow anti-join of the
-    * bucketed scan — already one aligned partition per bucket — so
-    * clustering again would ADD a full shuffle for nothing (§2.4).
-    * Correctness never depends on the file layout (bucket ids are
-    * per-row hashes; sortBy is per-file).
-    */
-  private def writePostings(staged: DataFrame, nb: Int,
-                            table: String, cluster: Boolean = true): Unit = {
-    val rows = staged.select("term", "doc_id", "tf", "dl", "df", "pb")
-    (if (cluster) rows.repartition(nb, col("term")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pb")
-      .bucketBy(nb, "term").sortBy("term")
-      .saveAsTable(table)
-  }
+  private[graft] def postings(tag: String) = BucketedStore.Table(
+    s"${tag}_lpost", Seq("term", "doc_id", "tf", "dl", "df", "pb"),
+    Seq("term"), Some("pb"))
 
   /** The touched-terms ledger backing [[refreshCountsPartial]]: every
     * [[append]] records its batch's distinct terms, every [[delete]]
     * the deleted docs' — exactly the terms whose stored df is stale
     * (append: lower bounds on the new rows; delete: upper bounds on
-    * the survivors). Recorded BEFORE the postings mutate, so a crash
-    * between the two leaves only harmless extra ledger rows (partial
-    * refresh re-levels an already-exact term idempotently), never a
-    * stale term the ledger missed. Tiny: batch-vocabulary grain.
+    * the survivors), recorded BEFORE the postings mutate
+    * ([[BucketedStore]] crash order).
     */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = touchT(tag)
-    if (!spark.catalog.tableExists(tT)) {
-      BandIndex.dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[String].toDF("term")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            terms: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    terms.select(col("term")).distinct().write.insertInto(touchT(tag))
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[String].toDF("term")
-      .write.mode(SaveMode.Overwrite).saveAsTable(touchT(tag))
-    spark.catalog.refreshTable(touchT(tag))
-  }
+  private def touched(tag: String) =
+    BucketedStore.Ledger(s"${tag}_ltouched", "term STRING")
 
   /** Ledger seeding for the re-level pricing bench
     * ([[graft.RelevelBench]]) and policy specs — the ONE sanctioned
@@ -211,44 +156,19 @@ object LexIndex {
     */
   private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
                                          terms: DataFrame): Unit =
-    recordTouched(spark, tag, terms)
-
-  /** Partial-vs-full re-level policy threshold, set from MEASUREMENT
-    * (r18, `RELEVEL_r18.json` — sf0.1, 32 partitions, medians of 3
-    * reps on fresh identical pre-states; SCALE.md §"Pricing the
-    * re-level knob" holds the table and the why): the partial path
-    * beat the full re-level at EVERY measured touched-fraction,
-    * including true complete cover — 0.51×, 0.50×, 0.58×, 0.63× of
-    * full at f ∈ {1/32, 4/32, 16/32, 32/32} — because the
-    * dynamic-overwrite writer's cost is proportional to touched
-    * partitions while the full path always pays the whole bucketed
-    * rewrite. So the measured crossover does not exist below f = 1,
-    * and the threshold sits AT complete cover: [[relevel]] takes
-    * partial for any proper subset and full only when the ledger
-    * covers every partition — where the two are row-work-equivalent
-    * and full avoids the two costs that DO grow with cover at the
-    * 2^18-partition production layout (a touched-partition `isin`
-    * literal list the planner must carry, and one commit per
-    * partition vs one atomic table rewrite). That extrapolation is
-    * flagged as such: at sf0.1 those terms are sub-noise (0.72 s vs
-    * 1.15 s even at full cover).
-    */
-  val RelevelPartialMaxFraction = 1.0
+    touched(tag).record(spark, terms)
 
   /** The re-level POLICY verb the pipeline's artifact phase applies
     * (r17 verdict missing #2): read the ledger's touched-partition
     * fraction, take the bounded partial path below
-    * [[RelevelPartialMaxFraction]] and the wholesale full re-level at
-    * or above it. Returns (path, touched fraction, partitions
-    * rewritten) for the caller's report row — the decision must be
-    * visible, not silent.
+    * [[BucketedStore.RelevelPartialMaxFraction]] and the wholesale full
+    * re-level at or above it ([[BucketedStore.relevelBy]]). Returns
+    * (path, touched fraction, partitions rewritten).
     */
   def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
-    BandIndex.relevelBy(spark, touchT(tag), postT(tag), Seq("term"))(
-      parts => refreshCountsPartial(spark, tag, parts)) {
-      refreshCounts(spark, tag)
-      BandIndex.bucketsOf(spark, postT(tag)).toLong
-    }
+    BucketedStore.relevelBy(spark, touched(tag), postings(tag))(
+      parts => refreshCountsPartial(spark, tag, parts))(
+      refreshCounts(spark, tag))
 
   /** Posting rows of a doc relation (doc_id, text): one row per
     * (doc, distinct term) with tf and dl — the derivation [[buildOrLoad]]
@@ -299,9 +219,8 @@ object LexIndex {
     // pre-pb-mirror store rebuilds here instead of failing inside the
     // partial re-level
     if (!exists(spark, tag)) {
-      Seq(pT, sT, touchT(tag)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      BandIndex.dropStaleLocations(spark, Seq(pT, sT, touchT(tag)))
+      tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      BucketedStore.dropStaleLocations(spark, tables(tag))
       val post = postingRows(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -310,8 +229,8 @@ object LexIndex {
         // df computed ONCE at build (skew-safe groupBy+join, never a
         // term window) — never again on the read path (the bsz
         // convention). Partitioned by pb + bucketed by term — see
-        // [[withPb]] for why the layout carries both.
-        writePostings(withPb(withDf(post), buckets), buckets, pT)
+        // [[postings]] for why the layout carries both.
+        postings(tag).write(postings(tag).rows(withDf(post), buckets), buckets)
         // corpus stats from the SAME cached posting relation: every doc
         // has >= 1 posting (tokens() of any text is non-empty), so the
         // doc-grain fold loses nothing
@@ -319,7 +238,7 @@ object LexIndex {
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
           .write.mode(SaveMode.Overwrite).saveAsTable(sT)
         // fresh build is exact everywhere — an empty touched ledger
-        ensureTouched(spark, tag)
+        touched(tag).ensure(spark)
       } finally post.unpersist()
     }
     (spark.table(pT), spark.table(sT))
@@ -336,12 +255,9 @@ object LexIndex {
     val post = postingRows(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ledger first (see [[ensureTouched]] — crash between leaves
-      // only harmless extra rows), then the postings
-      recordTouched(spark, tag, post.select("term"))
-      withPb(withDf(post), BandIndex.bucketsOf(spark, pT))
-        .select("term", "doc_id", "tf", "dl", "df", "pb")
-        .write.insertInto(pT)
+      // ledger first (crash order), then the postings
+      touched(tag).record(spark, post)
+      postings(tag).insert(withDf(post), BandIndex.bucketsOf(spark, pT))
       // stats: standing row MATERIALIZED (1-row collect) before the
       // overwrite — never read-your-write-target
       val st = spark.table(sT).collect()(0)
@@ -364,18 +280,19 @@ object LexIndex {
     * that only rewrites buckets the ledger says are stale.
     */
   def refreshCounts(spark: SparkSession, tag: String): Unit = {
-    val pT = postT(tag)
+    val p = postings(tag)
+    val pT = p.name
     val buckets = BandIndex.bucketsOf(spark, pT)
-    val staged = withPb(withDf(spark.table(pT)
+    val staged = p.rows(withDf(spark.table(pT)
         .select(col("term"), col("doc_id"), col("tf"), col("dl"))), buckets)
       .localCheckpoint() // sever from the table being overwritten
-    writePostings(staged, buckets, pT)
+    p.write(staged, buckets)
     // drop any session-cached plan over the pre-refresh postings (the
     // splitHotCells convention — saveAsTable's implicit invalidation
     // does not reach persisted reads; r14 advice)
     spark.catalog.refreshTable(pT)
     // everything is exact again — the ledger resets
-    clearTouched(spark, tag)
+    touched(tag).clear(spark)
   }
 
   /** BOUNDED df re-level (r15 verdict #4): rewrite ONLY the posting
@@ -386,7 +303,7 @@ object LexIndex {
     * costliest maintenance op in the repo, yet only the touched terms'
     * df is stale; this does daily-batch-proportional work instead:
     *
-    *   1. touched terms → their partitions pb = pmod(hash(term), nb) —
+    *   1. touched terms → their pb mirror partitions —
     *      a batch-vocabulary-grain distinct, collected (bounded by nb);
     *   2. ONE partition-pruned scan of those partitions (a term's rows
     *      are hash-confined to its pb, so df recomputed within the
@@ -403,19 +320,18 @@ object LexIndex {
     * spec-pinned). Returns the number of partitions rewritten.
     */
   def refreshCountsPartial(spark: SparkSession, tag: String): Long =
-    refreshCountsPartial(spark, tag, BandIndex.touchedPartitions(spark,
-      touchT(tag), BandIndex.bucketsOf(spark, postT(tag)), Seq("term")))
+    refreshCountsPartial(spark, tag, BucketedStore.touchedPartitions(spark,
+      touched(tag), postings(tag), BandIndex.bucketsOf(spark, postT(tag))))
 
   private def refreshCountsPartial(spark: SparkSession, tag: String,
                                    parts: Seq[Int]): Long = {
-    val pT = postT(tag)
-    ensureTouched(spark, tag)
-    val nb = BandIndex.bucketsOf(spark, pT)
-    BandIndex.relevelPartitions(spark, pT, parts, "pb",
-      scan => withPb(withDf(scan
-          .select(col("term"), col("doc_id"), col("tf"), col("dl"))), nb)
-        .select("term", "doc_id", "tf", "dl", "df", "pb"),
-      () => clearTouched(spark, tag))
+    val p = postings(tag)
+    touched(tag).ensure(spark)
+    val nb = BandIndex.bucketsOf(spark, p.name)
+    BucketedStore.relevelPartitions(spark, p, parts,
+      scan => p.rows(withDf(scan
+          .select(col("term"), col("doc_id"), col("tf"), col("dl"))), nb),
+      () => touched(tag).clear(spark))
   }
 
   /** Takedown maintenance (r15 verdict #1, dual of [[append]]): remove
@@ -458,7 +374,7 @@ object LexIndex {
       val removed = gone.count()
       if (removed == 0L) return 0L
       beforeWrites()
-      recordTouched(spark, tag, gone.select("term"))
+      touched(tag).record(spark, gone)
       // the deleted docs' exact stats contribution, from their own
       // stored rows (dl rides on every posting); standing row
       // materialized (1-row collect) before any write
@@ -470,11 +386,12 @@ object LexIndex {
       val (n1, s1) = (st.getLong(0) - g.getLong(0),
         st.getLong(1) - g.getLong(1))
       val nb = BandIndex.bucketsOf(spark, pT)
+      val p = postings(tag)
       val staged = post.join(ids, Seq("doc_id"), "left_anti")
-        .select("term", "doc_id", "tf", "dl", "df", "pb")
+        .select(p.cols.map(col): _*)
         .localCheckpoint()
       spark.sql(s"DROP TABLE IF EXISTS $sT")
-      writePostings(staged, nb, pT, cluster = false)
+      p.write(staged, nb, cluster = false)
       import spark.implicits._
       Seq((n1, s1)).toDF("n_docs", "sum_dl")
         .write.mode(SaveMode.Overwrite).saveAsTable(sT)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored media-signature artifact — the production home of the
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   - `<tag>_msig`  (doc_id, b0..b3)  bucketed by doc_id — the
   *     signatures, fetched by id at the exact-Hamming verify
   *   - `<tag>_mband` (bk, doc_id, bsz) bucketed by bk, partitioned by
-  *     pbk = pmod(hash(bk), nb) (the LexIndex pb mirror enabling
+  *     the pbk mirror of the bk bucket ([[BucketedStore]], enabling
   *     [[refreshBucketSizesPartial]], r17; `<tag>_mtouched` is the
   *     bucket ledger) — band postings
   *     with the SINGLE key bk = band_idx * 2^16 + band_value, so the
@@ -46,63 +46,29 @@ object MediaSigStore {
   def audioTag(dir: String): String = BandIndex.tag(dir, "audsig")
   def videoTag(dir: String): String = BandIndex.tag(dir, "vidsig")
 
-  private def sigT(tag: String) = s"${tag}_msig"
-  private def bandT(tag: String) = s"${tag}_mband"
+  private def sigT(tag: String) = sigs(tag).name
+  private def bandT(tag: String) = bands(tag).name
 
-  private def touchT(tag: String) = s"${tag}_mtouched"
+  private def sigs(tag: String) = BucketedStore.Table(s"${tag}_msig",
+    Seq("doc_id", "b0", "b1", "b2", "b3"), Seq("doc_id"))
+
+  /** The band table, partitioned by the pbk mirror of its bk bucket:
+    * what makes [[refreshBucketSizesPartial]] a bounded op — a bk
+    * bucket's rows are hash-confined to one partition, so bsz
+    * recomputed over a partition subset is exact.
+    */
+  private def bands(tag: String) = BucketedStore.Table(s"${tag}_mband",
+    Seq("bk", "doc_id", "bsz", "pbk"), Seq("bk"), Some("pbk"))
+
+  /** Touched-bucket ledger ([[BucketedStore]] crash order). */
+  private def touched(tag: String) =
+    BucketedStore.Ledger(s"${tag}_mtouched", "bk INT")
 
   /** Every table this family stores for `tag` (r16 ADVICE #2: reset
     * paths reuse this so they cannot drift from the layout).
     */
   def tables(tag: String): Seq[String] =
-    Seq(sigT(tag), bandT(tag), touchT(tag))
-
-  /** pbk partition column mirroring the bk bucket hash (the LexIndex
-    * withPb convention, r17) — what makes [[refreshBucketSizesPartial]]
-    * a bounded op: a bk bucket's rows are hash-confined to one
-    * partition, so bsz recomputed over a partition subset is exact.
-    */
-  private def withPbk(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pbk", expr(s"pmod(hash(bk), $nb)").cast("int"))
-
-  private def writeBands(staged: DataFrame, nb: Int, table: String,
-                         cluster: Boolean = true): Unit = {
-    // r19 (§6, the LexIndex.writePostings rationale): one file per
-    // bucket via bucket-key clustering; deletes pass false (§2.4)
-    val rows = staged.select("bk", "doc_id", "bsz", "pbk")
-    (if (cluster) rows.repartition(nb, col("bk")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pbk")
-      .bucketBy(nb, "bk").sortBy("bk")
-      .saveAsTable(table)
-  }
-
-  /** Touched-bucket ledger (the LexIndex crash order: recorded BEFORE
-    * mutation — extra rows are harmless, missed ones are not).
-    */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = touchT(tag)
-    if (!spark.catalog.tableExists(tT)) {
-      BandIndex.dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[Int].toDF("bk")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("bk").cast("int")).distinct()
-      .write.insertInto(touchT(tag))
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[Int].toDF("bk")
-      .write.mode(SaveMode.Overwrite).saveAsTable(touchT(tag))
-    spark.catalog.refreshTable(touchT(tag))
-  }
+    Seq(sigT(tag), bandT(tag), touched(tag).name)
 
   def buckets(spark: SparkSession, tag: String): Int =
     BandIndex.bucketsOf(spark, sigT(tag))
@@ -110,12 +76,12 @@ object MediaSigStore {
   /** Whether the stored artifact for `tag` is fully cataloged (the
     * IvfIndex convention) AT the current vintage: the band table must
     * carry the r17 pbk partition mirror the maintenance verbs require
-    * ([[BandIndex.partitionedBy]]) — a pre-mirror store reads as
+    * ([[BucketedStore.partitionedBy]]) — a pre-mirror store reads as
     * absent and self-heals via buildOrLoad.
     */
   def exists(spark: SparkSession, tag: String): Boolean =
     spark.catalog.tableExists(sigT(tag)) &&
-      BandIndex.partitionedBy(spark, bandT(tag), "pbk")
+      BucketedStore.partitionedBy(spark, bandT(tag), "pbk")
 
   /** (bk, doc_id) postings of a signature relation. */
   private[ops] def bandRows(sigs: DataFrame): DataFrame =
@@ -147,29 +113,25 @@ object MediaSigStore {
     val complete = exists(spark, tag) &&
       spark.table(bT).columns.contains("bsz")
     if (!complete) {
-      Seq(sT, bT, touchT(tag)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      BandIndex.dropStaleLocations(spark, Seq(sT, bT, touchT(tag)))
-      val sigs = sigFn(docs)
+      tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      BucketedStore.dropStaleLocations(spark, tables(tag))
+      val staged = sigFn(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val buckets =
-          BandIndex.derivedBuckets(sigs.count(), targetRowsPerBucket)
-        sigs.repartition(buckets, col("doc_id"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "doc_id").sortBy("doc_id")
-          .saveAsTable(sT)
+          BandIndex.derivedBuckets(staged.count(), targetRowsPerBucket)
+        sigs(tag).write(staged, buckets)
         // bucket-population column computed ONCE at build — the cap on
         // the read paths is then a pushed scan predicate (BandIndex
         // bsz) — via the skew-safe BandIndex.withKeyCount, never a bk
         // window: the hottest bk IS the degenerate media class
         // (solid color, silence) the cap exists for
-        writeBands(withPbk(
+        bands(tag).write(bands(tag).rows(
           BandIndex.withKeyCount(bandRows(spark.table(sT)),
-            Seq("bk"), "bsz"), buckets), buckets, bT)
+            Seq("bk"), "bsz"), buckets), buckets)
         // fresh build is exact everywhere — an empty touched ledger
-        ensureTouched(spark, tag)
-      } finally sigs.unpersist()
+        touched(tag).ensure(spark)
+      } finally staged.unpersist()
     }
     (spark.table(sT), spark.table(bT))
   }
@@ -182,10 +144,10 @@ object MediaSigStore {
     val (sT, bT) = (sigT(tag), bandT(tag))
     require(spark.catalog.tableExists(sT) && spark.catalog.tableExists(bT),
       s"append target $tag does not exist — buildOrLoad first")
-    val sigs = sigFn(newDocs)
+    val batch = sigFn(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      sigs.write.insertInto(sT)
+      batch.write.insertInto(sT)
       // bsz for appended rows = standing bucket count + batch count —
       // the bucket's TRUE size at insert time, so a bucket crossing
       // HotBucketCap through appends is capped for every row it gains
@@ -206,22 +168,20 @@ object MediaSigStore {
       import spark.implicits._
       val nb = BandIndex.bucketsOf(spark, bT)
       // ledger first (crash order), then the rows
-      recordTouched(spark, tag, bandRows(sigs).select("bk"))
-      val batchBks = bandRows(sigs).select("bk").distinct()
+      touched(tag).record(spark, bandRows(batch))
+      val batchBks = bandRows(batch).select("bk").distinct()
       val standing = spark.table(bT)
         .join(broadcast(batchBks), Seq("bk"), "left_semi")
         .groupBy("bk").agg(count(lit(1)).as("standing_n"))
         .select(col("bk").cast("int"), col("standing_n").cast("long"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
         .toDF("bk", "standing_n")
-      withPbk(BandIndex.withKeyCount(bandRows(sigs), Seq("bk"), "batch_n")
+      bands(tag).insert(
+        BandIndex.withKeyCount(bandRows(batch), Seq("bk"), "batch_n")
           .join(broadcast(standing), Seq("bk"), "left")
           .withColumn("bsz",
             col("batch_n") + coalesce(col("standing_n"), lit(0L))), nb)
-        // explicit order: insertInto is positional (bk,doc_id,bsz,pbk)
-        .select(col("bk"), col("doc_id"), col("bsz"), col("pbk"))
-        .write.insertInto(bT)
-    } finally sigs.unpersist()
+    } finally batch.unpersist()
   }
 
   /** Takedown maintenance (r15 verdict #1, dual of [[append]]): remove
@@ -236,46 +196,16 @@ object MediaSigStore {
     * [[refreshBucketSizes]] re-levels, after which [[probe]] ==
     * rebuild-over-survivors exactly (MediaSigStoreSpec differential on
     * the serving face). Survivors staged (localCheckpoint); the band
-    * table — written second at build — drops FIRST so a crash between
-    * the writes breaks the both-tables gate into a rebuild. Returns
-    * (signature rows removed, band rows removed).
-    * `beforeWrites` runs once the read-only counts are done, before
-    * the first write: a concurrent caller's write gate
-    * (`GovernanceQueries.parPhase`), which may abort the verb there.
+    * table — written second at build — drops FIRST
+    * ([[BucketedStore.deleteBoth]]: the crash order and the
+    * `beforeWrites` gate). Returns (signature rows removed, band rows
+    * removed).
     */
   def delete(spark: SparkSession, docIds: DataFrame,
              tag: String,
-             beforeWrites: () => Unit = () => ()): (Long, Long) = {
-    val (sT, bT) = (sigT(tag), bandT(tag))
-    require(spark.catalog.tableExists(sT) && spark.catalog.tableExists(bT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
-    val sigs = spark.table(sT)
-    val bands = spark.table(bT)
-    val sRemoved = sigs.join(ids, Seq("doc_id"), "left_semi").count()
-    val bRemoved = bands.join(ids, Seq("doc_id"), "left_semi").count()
-    if (sRemoved == 0L && bRemoved == 0L) return (0L, 0L)
-    beforeWrites()
-    // ledger first (crash order): the deleted items' buckets are the
-    // keys whose surviving bsz is about to go stale
-    recordTouched(spark, tag,
-      bands.join(ids, Seq("doc_id"), "left_semi").select("bk"))
-    val buckets = BandIndex.bucketsOf(spark, sT)
-    val stagedSigs = sigs.join(ids, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val stagedBands = bands.join(ids, Seq("doc_id"), "left_anti")
-      .select("bk", "doc_id", "bsz", "pbk")
-      .localCheckpoint()
-    spark.sql(s"DROP TABLE IF EXISTS $bT")
-    // no re-clustering: staged survivors are bucket-aligned (§2.4)
-    stagedSigs.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(sT)
-    writeBands(stagedBands, buckets, bT, cluster = false)
-    spark.catalog.refreshTable(sT)
-    spark.catalog.refreshTable(bT)
-    (sRemoved, bRemoved)
-  }
+             beforeWrites: () => Unit = () => ()): (Long, Long) =
+    BucketedStore.deleteBoth(spark, docIds, tag, sigs(tag), bands(tag),
+      touched(tag), bands(tag), beforeWrites)
 
   /** Periodic compaction: recompute exact bsz for EVERY row from the
     * signature table, preserving the bucket spec. Appends stamp their
@@ -287,12 +217,12 @@ object MediaSigStore {
   def refreshBucketSizes(spark: SparkSession, tag: String): Unit = {
     val bT = bandT(tag)
     val buckets = BandIndex.bucketsOf(spark, bT)
-    writeBands(withPbk(
+    bands(tag).write(bands(tag).rows(
       BandIndex.withKeyCount(bandRows(spark.table(sigT(tag))),
-        Seq("bk"), "bsz"), buckets), buckets, bT)
+        Seq("bk"), "bsz"), buckets), buckets)
     spark.catalog.refreshTable(bT)
     // everything is exact again — the ledger resets
-    clearTouched(spark, tag)
+    touched(tag).clear(spark)
   }
 
   /** BOUNDED bsz re-level (r17 — the LexIndex refreshCountsPartial
@@ -307,43 +237,28 @@ object MediaSigStore {
     * byte-identical). Returns partitions rewritten.
     */
   def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long =
-    refreshBucketSizesPartial(spark, tag, BandIndex.touchedPartitions(spark,
-      touchT(tag), BandIndex.bucketsOf(spark, bandT(tag)), Seq("bk")))
+    refreshBucketSizesPartial(spark, tag, BucketedStore.touchedPartitions(
+      spark, touched(tag), bands(tag), BandIndex.bucketsOf(spark, bandT(tag))))
 
   private def refreshBucketSizesPartial(spark: SparkSession, tag: String,
                                         parts: Seq[Int]): Long = {
-    val bT = bandT(tag)
-    ensureTouched(spark, tag)
-    val nb = BandIndex.bucketsOf(spark, bT)
-    BandIndex.relevelPartitions(spark, bT, parts, "pbk",
-      scan => withPbk(BandIndex.withKeyCount(
+    val b = bands(tag)
+    touched(tag).ensure(spark)
+    val nb = BandIndex.bucketsOf(spark, b.name)
+    BucketedStore.relevelPartitions(spark, b, parts,
+      scan => b.rows(BandIndex.withKeyCount(
           scan.select(col("bk"), col("doc_id")),
-          Seq("bk"), "bsz"), nb)
-        .select("bk", "doc_id", "bsz", "pbk"),
-      () => clearTouched(spark, tag))
+          Seq("bk"), "bsz"), nb),
+      () => touched(tag).clear(spark))
   }
 
-  /** The family's re-level POLICY verb ([[BandIndex.relevelBy]]: one
-    * ledger read, partial below [[LexIndex.RelevelPartialMaxFraction]],
-    * full at complete cover). Returns (path, touched fraction,
-    * partitions rewritten).
+  /** The family's re-level POLICY verb ([[BucketedStore.relevelBy]]).
+    * Returns (path, touched fraction, partitions rewritten).
     */
   def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
-    BandIndex.relevelBy(spark, touchT(tag), bandT(tag), Seq("bk"))(
-      parts => refreshBucketSizesPartial(spark, tag, parts)) {
-      refreshBucketSizes(spark, tag)
-      BandIndex.bucketsOf(spark, bandT(tag)).toLong
-    }
-
-  /** Ledger seeding for policy specs/benches — see
-    * [[LexIndex.seedTouchedForBench]]; production paths never call it.
-    */
-  private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
-                                         keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("bk").cast("int")).distinct()
-      .write.insertInto(touchT(tag))
-  }
+    BucketedStore.relevelBy(spark, touched(tag), bands(tag))(
+      parts => refreshBucketSizesPartial(spark, tag, parts))(
+      refreshBucketSizes(spark, tag))
 
   /** What the hot-bucket cap silently skips on the stored index:
     * (over-cap buckets, posting rows inside them). Scan-only — bsz is a

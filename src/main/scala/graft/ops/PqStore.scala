@@ -47,7 +47,9 @@ object PqStore {
     BandIndex.tag(dir, s"pq${SimilarityQueries.PqM}x$k")
 
   private def cbT(tag: String) = s"${tag}_pqcodebook"
-  private def codesT(tag: String) = s"${tag}_pqcodes"
+  private def codesT(tag: String) = codes(tag).name
+  private def codes(tag: String) = BucketedStore.Table(s"${tag}_pqcodes",
+    Seq("vec_id", "nrm", "codes"), Seq("vec_id"))
 
   /** Every table this family stores for `tag` (r16 ADVICE #2: reset
     * paths reuse this so they cannot drift from the layout).
@@ -80,7 +82,7 @@ object PqStore {
     // partial state — crash between writes or an external drop of either
     // table — self-heals by rebuilding.
     if (!(spark.catalog.tableExists(bT) && spark.catalog.tableExists(cT))) {
-      BandIndex.dropStaleLocations(spark, Seq(bT, cT))
+      BucketedStore.dropStaleLocations(spark, Seq(bT, cT))
       // One code row per vector: bucket derivation is the parquet
       // count — metadata-only, no extra corpus pass.
       val buckets = BandIndex.derivedBuckets(
@@ -90,13 +92,7 @@ object PqStore {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         cb.write.mode(SaveMode.Overwrite).saveAsTable(bT)
-        // repartition-by-bucket-key: one file per bucket (r19 §6,
-        // the LexIndex.writePostings rationale)
-        SimilarityQueries.encodePq(n, cb)
-          .repartition(buckets, col("vec_id"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "vec_id").sortBy("vec_id")
-          .saveAsTable(cT)
+        codes(t).write(SimilarityQueries.encodePq(n, cb), buckets)
       } finally cb.unpersist()
       // Build-time audit: code utilization decides quantization error —
       // a subspace collapsing onto few codes wastes its bits and
@@ -165,11 +161,9 @@ object PqStore {
     beforeWrites()
     val buckets = BandIndex.bucketsOf(spark, cT)
     val staged = t.join(ids, Seq("vec_id"), "left_anti")
-      .select("vec_id", "nrm", "codes")
+      .select(codes(tag).cols.map(col): _*)
       .localCheckpoint()
-    staged.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "vec_id").sortBy("vec_id")
-      .saveAsTable(cT)
+    codes(tag).write(staged, buckets, cluster = false)
     spark.catalog.refreshTable(cT)
     removed
   }

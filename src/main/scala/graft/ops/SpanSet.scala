@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored duplicated-span artifact — the materialized table pair that
@@ -64,8 +64,16 @@ object SpanSet {
     */
   def charTag(dir: String): String = BandIndex.tag(dir, "charspans")
 
-  private def rowsT(tag: String) = s"${tag}_spanrows"
-  private def setT(tag: String) = s"${tag}_spanset"
+  private def rowsT(tag: String) = rows(tag).name
+  private def setT(tag: String) = counts(tag).name
+
+  /** Both tables bucket on sh with equal counts: the rows ⋈ counts
+    * join stays co-partitioned (the family invariant).
+    */
+  private def rows(tag: String) = BucketedStore.Table(s"${tag}_spanrows",
+    Seq("doc_id", "source", "n_spans", "sh"), Seq("sh"))
+  private def counts(tag: String) = BucketedStore.Table(s"${tag}_spanset",
+    Seq("sh", "nd"), Seq("sh"))
 
   /** Every table this family stores for `tag` (r16 ADVICE #2: reset
     * paths reuse this so they cannot drift from the layout).
@@ -116,31 +124,24 @@ object SpanSet {
     // partial state — crash between writes or an external drop of either
     // table — self-heals by rebuilding.
     if (!(spark.catalog.tableExists(rT) && spark.catalog.tableExists(sT))) {
-      BandIndex.dropStaleLocations(spark, Seq(rT, sT))
+      BucketedStore.dropStaleLocations(spark, Seq(rT, sT))
       // Persist so the sizing count and the write share one explode
       // pass; BOTH tables take the count derived from the span rows —
       // equal bucket counts on sh keep the rows ⋈ counts join
       // co-partitioned (the family invariant).
-      val rows = extractor(docs)
+      val staged = extractor(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val buckets = BandIndex.derivedBuckets(rows.count(), targetRowsPerBucket)
-        // repartition-by-bucket-key: one file per bucket (r19 §6);
-        // the counts write below stays untouched — it is bucket-local
-        // over this table and already aligned
-        rows.repartition(buckets, col("sh"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "sh").sortBy("sh")
-          .saveAsTable(rT)
+        val buckets =
+          BandIndex.derivedBuckets(staged.count(), targetRowsPerBucket)
+        rows(tag).write(staged, buckets)
         // Counts derive from the stored rows (one explode pass total);
         // the rows table is already sh-bucketed, so this aggregation is
-        // bucket-local — no shuffle even at build time.
-        spark.table(rT).groupBy("sh")
-          .agg(count(lit(1)).as("nd"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "sh").sortBy("sh")
-          .saveAsTable(sT)
-      } finally rows.unpersist()
+        // bucket-local — no shuffle even at build time, and already
+        // aligned: no clustering.
+        counts(tag).write(spark.table(rT).groupBy("sh")
+          .agg(count(lit(1)).as("nd")), buckets, cluster = false)
+      } finally staged.unpersist()
       // Build-time audit (the band index's hot-bucket convention): how
       // much of the span space the MinDocs threshold marks as
       // duplicated — a corpus where most spans are shared is boilerplate
@@ -245,8 +246,8 @@ object SpanSet {
     require(spark.catalog.tableExists(rT) && spark.catalog.tableExists(sT),
       s"delete target $tag does not exist — buildOrLoad first")
     val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
-    val rows = spark.table(rT)
-    val gone = rows.join(ids, Seq("doc_id"), "left_semi")
+    val stored = spark.table(rT)
+    val gone = stored.join(ids, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val removed = gone.count()
@@ -259,12 +260,11 @@ object SpanSet {
         .agg((-count(lit(1))).as("nd"))
         .localCheckpoint()
       val nNegs = stagedNegs.count()
-      val stagedRows = rows.join(ids, Seq("doc_id"), "left_anti")
+      val stagedRows = stored.join(ids, Seq("doc_id"), "left_anti")
         .localCheckpoint()
-      val buckets = BandIndex.bucketsOf(spark, rT)
-      stagedRows.write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "sh").sortBy("sh")
-        .saveAsTable(rT)
+      // no re-clustering: staged survivors are bucket-aligned
+      rows(tag).write(stagedRows, BandIndex.bucketsOf(spark, rT),
+        cluster = false)
       stagedNegs.select(col("sh"), col("nd")).write.insertInto(sT)
       spark.catalog.refreshTable(rT)
       spark.catalog.refreshTable(sT)
@@ -279,11 +279,9 @@ object SpanSet {
     * no shuffle.
     */
   def refreshSpanCounts(spark: SparkSession, tag: String): Unit =
-    spark.table(rowsT(tag)).groupBy("sh")
-      .agg(count(lit(1)).as("nd"))
-      .write.mode(SaveMode.Overwrite)
+    counts(tag).write(spark.table(rowsT(tag)).groupBy("sh")
+        .agg(count(lit(1)).as("nd")),
       // rows-table spec, NOT a fresh derivation: the family invariant
       // is equal sh bucketing across both tables
-      .bucketBy(BandIndex.bucketsOf(spark, rowsT(tag)), "sh").sortBy("sh")
-      .saveAsTable(setT(tag))
+      BandIndex.bucketsOf(spark, rowsT(tag)), cluster = false)
 }
