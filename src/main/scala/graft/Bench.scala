@@ -55,6 +55,10 @@ import org.apache.spark.sql.SparkSession
   *     rounds running): per-query medians go to BENCH_LAST.json, full
   *     precision plus per-pass per-query detail to
   *     BENCH_FULL_LAST.json, which a tail capture cannot damage.
+  *
+  * A query that throws is not timed as a result: it is printed as
+  * `[bench] <name> failed: <msg>`, listed under "failed" in both
+  * records, and the main exits non-zero after writing them.
   */
 object Bench {
   private val Passes = 3
@@ -144,6 +148,7 @@ object Bench {
     // The release is outside the timed region — residency bookkeeping,
     // not query work.
     val releaseAfter = ops.SharedCaches.releasePoints(names)
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def onePass(): Map[String, Double] = {
       // Warmup/previous-pass caches are dead weight for this pass
       // (warmup dir -> different plans; prior pass -> pre-built working
@@ -152,7 +157,10 @@ object Bench {
       names.map { name =>
         val t0 = System.nanoTime()
         try { SparkEntry.queries(name)(spark, sfDir).count() }
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+        }
         val sec = (System.nanoTime() - t0) / 1e9
         releaseAfter.getOrElse(name, Nil).foreach(ops.SharedCaches.release)
         name -> sec
@@ -268,7 +276,8 @@ object Bench {
         s""""pass_ext_load_cores":$extJ,""" +
         s""""pass_start_loadavg":$laJ,"pass_end_loadavg":$laEndJ,""" +
         s""""load_threshold_cores":$LoadThresholdCores,""" +
-        s""""contended_discarded":$discarded,"extra_passes":$extras"""
+        s""""contended_discarded":$discarded,"extra_passes":$extras,""" +
+        s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     val stdoutLine =
       line("\"queries_file\":\"BENCH_LAST.json\",") + "}"
     val fileLine = line(s""""queries":${qsJson(f2)},""") + "}"
@@ -289,5 +298,10 @@ object Bench {
       java.nio.file.Paths.get("BENCH_LAST.json"), fileLine + "\n")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_FULL_LAST.json"), fullLine + "\n")
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** One declared operator query: the driver contract pairs a Spark
   * DataFrame program with a DuckDB-runnable ANSI-SQL twin over the same
@@ -78,7 +79,7 @@ object Tables {
       fs.listStatus(p).map(s =>
           s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString(",")
-    } catch { case _: Throwable => s"unreadable:${System.nanoTime()}" }
+    } catch { case NonFatal(_) => s"unreadable:${System.nanoTime()}" }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts is parquet TIMESTAMP(NANOS) which Spark has no native type

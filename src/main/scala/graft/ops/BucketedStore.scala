@@ -101,6 +101,29 @@ object BucketedStore {
       */
     def insert(df: DataFrame, nb: Int): Unit =
       rows(df, nb).write.insertInto(name)
+
+    /** The single-table takedown rewrite (the unledgered family `delete`
+      * verbs): remove every row whose `idCol` is in `ids`. A read-only
+      * count first; nothing to remove returns 0 untouched. Then
+      * `beforeWrites` (a concurrent caller's write gate,
+      * `GovernanceQueries.parPhase`, which may abort the verb there),
+      * the survivors staged (localCheckpoint — the write plan must not
+      * scan its own target) and written back without re-clustering.
+      * Returns rows removed.
+      */
+    def deleteIds(spark: SparkSession, ids: DataFrame, idCol: String,
+                  beforeWrites: () => Unit): Long = {
+      val gone = BandIndex.takedownIds(spark, ids, idCol)
+      val stored = spark.table(name)
+      val removed = stored.join(gone, Seq(idCol), "left_semi").count()
+      if (removed == 0L) return 0L
+      beforeWrites()
+      val nb = BandIndex.bucketsOf(spark, name)
+      write(stored.join(gone, Seq(idCol), "left_anti").localCheckpoint(), nb,
+        cluster = false)
+      spark.catalog.refreshTable(name)
+      removed
+    }
   }
 
   /** A family's touched-key ledger: the keys (`keySchema`, DDL) whose

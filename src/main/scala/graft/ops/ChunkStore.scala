@@ -128,31 +128,14 @@ object ChunkStore {
     * build over the surviving corpus (ChunkStoreSpec differentials
     * [[keepers]] — a keeper owned by a deleted doc re-elects to the
     * surviving minimum automatically, since keepers is a read-path agg
-    * over stored rows). Anti-join rewrite preserving the bucket spec;
-    * the staged survivors are materialized (localCheckpoint) before the
-    * overwrite — the write plan must not scan its own target. Returns
-    * chunk rows removed.
-    * `beforeWrites` runs once the read-only counts are done, before
-    * the first write: a concurrent caller's write gate
-    * (`GovernanceQueries.parPhase`), which may abort the verb there.
+    * over stored rows). The rewrite is
+    * [[BucketedStore.Table.deleteIds]]; `beforeWrites` is its write
+    * gate. Returns chunk rows removed.
     */
   def delete(spark: SparkSession, docIds: DataFrame, tag: String,
              beforeWrites: () => Unit = () => ()): Long = {
-    val cT = chunksT(tag)
-    require(spark.catalog.tableExists(cT),
+    require(spark.catalog.tableExists(chunksT(tag)),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = BandIndex.takedownIds(spark, docIds, "doc_id")
-    val t = spark.table(cT)
-    val removed = t.join(ids, Seq("doc_id"), "left_semi").count()
-    if (removed == 0L) return 0L
-    beforeWrites()
-    val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = t.join(ids, Seq("doc_id"), "left_anti")
-      .select(chunks(tag).cols.map(col): _*)
-      .localCheckpoint()
-    // no re-clustering: staged survivors are bucket-aligned
-    chunks(tag).write(staged, buckets, cluster = false)
-    spark.catalog.refreshTable(cT)
-    removed
+    chunks(tag).deleteIds(spark, docIds, "doc_id", beforeWrites)
   }
 }

@@ -197,32 +197,17 @@ object CorpusQueries {
     * near-dup stage rides the memoized CC labels (zero extra minhash
     * passes).
     *
-    * Memoized per (session, dir) and persisted under the
+    * Memoized ([[SharedCaches.memo]]) and persisted under the
     * [[SharedCaches.Funnel]] family (r14: with the mix audit the
     * relation gained a THIRD consumer, and only the CC leg was shared
     * — each consumer re-ran the tokenize/gopher/contamination/cap
-    * corpus passes; the minhashComponents memo pattern applied one
-    * level up).
+    * corpus passes).
     */
-  private val stagedMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
   private[graft] def stagedDocs(s: org.apache.spark.sql.SparkSession,
                                 dir: String): org.apache.spark.sql.DataFrame =
-    // synchronized (the ccMemo pattern): TrieMap.getOrElseUpdate may run
-    // the initializer once per racing caller, and this one runs the
-    // funnel build and registers persist/track/onRelease — it must run
-    // once even when consumers arrive from concurrent driver threads.
-    stagedMemo.synchronized { stagedMemo.getOrElseUpdate((s, dir), {
-      val staged = SharedCaches.track(SharedCaches.Funnel,
-        stagedDocsUncached(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      SharedCaches.onRelease(SharedCaches.Funnel) { () =>
-        stagedMemo.remove((s, dir)); ()
-      }
-      staged
-    }) }
+    SharedCaches.memo(SharedCaches.Funnel, "stagedDocs", s, dir) {
+      SharedCaches.persist(SharedCaches.Funnel, stagedDocsUncached(s, dir))
+    }
 
   private def stagedDocsUncached(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame = {
@@ -233,7 +218,7 @@ object CorpusQueries {
     // pass inside the one-time staged build. Persisted under the
     // Funnel family (same cache-vs-recompute knob as the shingle
     // relation; MEMORY_AND_DISK, released with the family).
-    val base = SharedCaches.track(SharedCaches.Funnel,
+    val base = SharedCaches.persist(SharedCaches.Funnel,
       Tables.t(s, dir, "documents")
         .withColumn("toks", tokens(col("text")))
         .withColumn("n_tok", size(col("toks")))
@@ -249,8 +234,7 @@ object CorpusQueries {
         // here re-tokenized the corpus a second time, r13 review)
         .withColumn("v_any", GovernanceQueries.ruleFlags(
           col("n_tok").cast("long"), col("sl"), col("nd"),
-          col("n_stop").cast("long")).map(_._2).reduce(_ || _))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          col("n_stop").cast("long")).map(_._2).reduce(_ || _)))
     // near-dup non-keepers: CC labels (memoized, shared with the
     // cluster family) + q_dedup_keep_best's argmax-struct election —
     // the skew-safe template (r17 verdict #1: the previous
@@ -600,10 +584,9 @@ object CorpusQueries {
             wordNgrams(col("toks"), ContamN).as("ng"))
         // Persisted: sized (count), hashed into the filter, and verify-
         // joined — three readers of the small side.
-        val bench = SharedCaches.track(SharedCaches.BloomBench,
+        val bench = SharedCaches.persist(SharedCaches.BloomBench,
           g.filter(col("source") === "src0")
-            .select(explode(col("ng")).as("ngram")).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .select(explode(col("ng")).as("ngram")).distinct())
         // Size the filter to the eval set (count runs on the SMALL side
         // only): next power of two >= BloomBitsPerGram per n-gram, with
         // the BloomBits floor. A fixed size would saturate on a large

@@ -87,9 +87,9 @@ object DedupQueries {
     * consumer). */
   private def containGramsPersisted(s: org.apache.spark.sql.SparkSession,
                                     dir: String): DataFrame =
-    SharedCaches.track(SharedCaches.ContainGrams,
-      ngramDocs(Tables.par(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SharedCaches.persist(SharedCaches.ContainGrams,
+      ngramDocs(Tables.par(s, dir, "documents")))
+
 
   /** Published-SemDeDup operating point (Abbas et al. use τ near 0.99 on
     * near-identical pairs). The shipped corpora have NO natural pairs
@@ -202,9 +202,9 @@ object DedupQueries {
     */
   private def shinglesPersisted(s: org.apache.spark.sql.SparkSession,
                                 dir: String): DataFrame =
-    SharedCaches.track(SharedCaches.Minhash,
-      shingleDf(Tables.par(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SharedCaches.persist(SharedCaches.Minhash,
+      shingleDf(Tables.par(s, dir, "documents")))
+
 
   /** The (doc_id, band, band_hash) LSH band index, persisted: it is the
     * dedup family's stored artifact — the relation an incremental ingest
@@ -213,9 +213,7 @@ object DedupQueries {
     * and both sides of the incremental query read one materialization.
     */
   private def bandsPersisted(sh: DataFrame): DataFrame =
-    SharedCaches.track(SharedCaches.Minhash,
-      bandsFromShingles(sh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SharedCaches.persist(SharedCaches.Minhash, bandsFromShingles(sh))
 
   /** MinHash+LSH verified near-dup pairs (the q_doc_dedup pipeline),
     * shared with the cluster-consolidation query so both stay one code
@@ -320,9 +318,9 @@ object DedupQueries {
   private def candidatesPersisted(s: org.apache.spark.sql.SparkSession,
                                   dir: String): DataFrame = {
     val sh = shinglesPersisted(s, dir)
-    SharedCaches.track(SharedCaches.Minhash,
-      candidateJaccard(sh, bandsPersisted(sh))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SharedCaches.persist(SharedCaches.Minhash,
+      candidateJaccard(sh, bandsPersisted(sh)))
+
   }
 
   private[ops] def minhashPairs(s: org.apache.spark.sql.SparkSession,
@@ -434,9 +432,7 @@ object DedupQueries {
     */
   private def simhashFpsPersisted(s: org.apache.spark.sql.SparkSession,
                                   dir: String): DataFrame =
-    SharedCaches.track(SharedCaches.Simhash,
-      simhashFps(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SharedCaches.persist(SharedCaches.Simhash, simhashFps(s, dir))
 
   /** DuckDB twin of [[simhashFps]] ending in `fp(doc_id, simhash)`. */
   private val simhashFpSqlCtes: String = {
@@ -538,9 +534,7 @@ object DedupQueries {
     */
   private def simhashHammingPersisted(s: org.apache.spark.sql.SparkSession,
                                       dir: String): DataFrame =
-    SharedCaches.track(SharedCaches.Simhash,
-      simhashHammingPairs(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SharedCaches.persist(SharedCaches.Simhash, simhashHammingPairs(s, dir))
 
   /** DuckDB twin of [[simhashHammingPairs]] ending in
     * `shham(doc_a, doc_b, hamming)`; callers must have
@@ -623,34 +617,25 @@ object DedupQueries {
     * star-contraction fixpoint runs its rounds at CONSTRUCTION time
     * (driver-side loop over checkpointed edge sets), so plan-level
     * caching cannot dedup it — the constructed, persisted label
-    * relation is memoized per (session, dir) and evicted with the
+    * relation is memoized ([[SharedCaches.memo]]) and evicted with the
     * minhash family's release (measured before sharing: keep_best
     * re-paid the full fixpoint, 1.97 s at sf0.1 for labels the
     * clusters query had already computed).
     */
-  private val ccMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
   private[ops] def minhashComponents(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    // synchronized (r18 ADVICE #4 pattern): the initializer runs the CC
-    // fixpoint and registers persist/track/onRelease — must run once
-    // even if consumers arrive from concurrent driver threads.
-    ccMemo.synchronized { ccMemo.getOrElseUpdate((s, dir), {
-      val labels = SharedCaches.track(SharedCaches.Minhash,
+    SharedCaches.memo(SharedCaches.Minhash, "cc", s, dir) {
+      val labels = SharedCaches.persist(SharedCaches.Minhash,
         clusterComponents(minhashPairs(s, dir)
           .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-          .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      SharedCaches.onRelease(SharedCaches.Minhash) { () =>
-        ccMemo.remove((s, dir))
-        // the label plan reads the star fixpoint's FINAL checkpointed
-        // edge set (a LogicalRDD leaf) — free those blocks with the
-        // family; nothing reads the labels after their release point
-        Checkpoints.free(labels)
-      }
+          .select(col("id").as("doc_id"), col("component").as("cluster_id")))
+      // the label plan reads the star fixpoint's FINAL checkpointed
+      // edge set (a LogicalRDD leaf) — free those blocks with the
+      // family; nothing reads the labels after their release point
+      SharedCaches.onRelease(SharedCaches.Minhash)(() =>
+        Checkpoints.free(labels))
       labels
-    }) }
+    }
 
   /** Connected components over an undirected edge list (`src`, `dst`) by
     * `iters` rounds of min-label propagation: label(x) := min(label(x),
@@ -1309,13 +1294,13 @@ object DedupQueries {
         val fps = simhashFpsPersisted(s, dir)
         // r18: eq is read twice below (n_pairs agg + hit semi-join) —
         // persist the pair set (edges ≪ corpus) like the hamming leg
-        val eq = SharedCaches.track(SharedCaches.Simhash,
+        val eq = SharedCaches.persist(SharedCaches.Simhash,
           fps.select(col("doc_id").as("doc_a"), col("simhash"))
+
             .join(fps.select(col("doc_id").as("doc_b"), col("simhash")),
               "simhash")
             .filter(col("doc_a") < col("doc_b"))
-            .select("doc_a", "doc_b")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .select("doc_a", "doc_b"))
         val ham = simhashHammingPersisted(s, dir).select("doc_a", "doc_b")
         val truth = minhashPairs(s, dir).select("doc_a", "doc_b")
         def row(pairs: DataFrame, variant: String): DataFrame = {
@@ -1565,9 +1550,9 @@ object DedupQueries {
         val rare = inv.groupBy("g1").agg(count(lit(1)).as("df"))
           .filter(col("df") <= ContainDfCap)
           .select("g1")
-        val r = SharedCaches.track(SharedCaches.ContainGrams,
-          inv.join(rare, "g1")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val r = SharedCaches.persist(SharedCaches.ContainGrams,
+          inv.join(rare, "g1"))
+
         // Support prefilter (SOUND — the emitted set is unchanged, so
         // the oracle keeps the simple >=1-shared-rare form): a pair
         // with containment >= tau shares >= ceil(tau*min(na,nb))
@@ -1749,9 +1734,9 @@ object DedupQueries {
         val (postings, docArrays) = ContainIndex.buildOrLoad(s,
           Tables.par(s, dir, "documents").filter(!isNew),
           ContainIndex.tag(dir, "cstanding"))
-        val newG = SharedCaches.track(SharedCaches.ContainBatch,
-          ngramDocs(Tables.par(s, dir, "documents").filter(isNew))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val newG = SharedCaches.persist(SharedCaches.ContainBatch,
+          ngramDocs(Tables.par(s, dir, "documents").filter(isNew)))
+
         ContainIndex.probe(newG, postings, docArrays)
       },
       Some(s"""WITH t AS (SELECT doc_id, string_split($normSql,' ') AS w FROM documents),
@@ -1875,9 +1860,9 @@ object DedupQueries {
         // — un-materialized, the n×cells soft-assignment scoring pass
         // (the query's dominant compute; cells ≈ n/target) ran twice
         // per execution. Persisted under the Embeddings family.
-        val soft = SharedCaches.track(SharedCaches.Embeddings,
-          SimilarityQueries.softAssign(a2, centn)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val soft = SharedCaches.persist(SharedCaches.Embeddings,
+          SimilarityQueries.softAssign(a2, centn))
+
         val l = soft.select(col("cell"), col("vec_id").as("vec_a"),
           col("v").as("va"), col("nrm").as("na"))
         val r = soft.select(col("cell"), col("vec_id").as("vec_b"),
@@ -2219,9 +2204,9 @@ object DedupQueries {
         // Arriving batch: shingled fresh (it is the only data not yet in
         // the index), persisted — both the band probe and the verify leg
         // read it.
-        val newSh = SharedCaches.track(SharedCaches.MinhashBatch,
-          shingleRows(Tables.par(s, dir, "documents").filter(isNew))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val newSh = SharedCaches.persist(SharedCaches.MinhashBatch,
+          shingleRows(Tables.par(s, dir, "documents").filter(isNew)))
+
         val cand = bandsFromShingles(newSh)
           .join(exB, Seq("band", "bh"))
           .select("doc_id", "match_id").distinct()

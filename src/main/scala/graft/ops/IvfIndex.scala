@@ -436,32 +436,17 @@ object IvfIndex {
     * centroids shift which cells are PROBED, never which vectors exist:
     * recall against the surviving corpus may drift until refresh, but
     * no deleted content is served — the direction a takedown needs.
-    * Anti-join rewrite preserving the bucket spec; survivors staged
-    * (localCheckpoint) before the overwrite. A crash mid-overwrite
-    * leaves the cells table partial/missing, which the both-tables gate
-    * turns into a rebuild. Returns cell rows removed.
-    * `beforeWrites` runs once the read-only counts are done, before
-    * the first write: a concurrent caller's write gate
-    * (`GovernanceQueries.parPhase`), which may abort the verb there.
+    * The rewrite is [[BucketedStore.Table.deleteIds]]; `beforeWrites`
+    * is its write gate. A crash mid-overwrite leaves the cells table
+    * partial/missing, which the both-tables gate turns into a rebuild.
+    * Returns cell rows removed.
     */
   def delete(spark: SparkSession, vecIds: DataFrame, tag: String,
              beforeWrites: () => Unit = () => ()): Long = {
-    val (cT, mT) = (cellsT(tag), centT(tag))
-    require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
+    require(spark.catalog.tableExists(cellsT(tag)) &&
+      spark.catalog.tableExists(centT(tag)),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = BandIndex.takedownIds(spark, vecIds, "vec_id")
-    val stored = spark.table(cT)
-    val removed = stored.join(ids, Seq("vec_id"), "left_semi").count()
-    if (removed == 0L) return 0L
-    beforeWrites()
-    val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = stored.join(ids, Seq("vec_id"), "left_anti")
-      .select(cellTable(tag).cols.map(col): _*)
-      .localCheckpoint()
-    // no re-clustering: staged survivors are bucket-aligned
-    cellTable(tag).write(staged, buckets, cluster = false)
-    spark.catalog.refreshTable(cT)
-    removed
+    cellTable(tag).deleteIds(spark, vecIds, "vec_id", beforeWrites)
   }
 
   /** Periodic compaction: recompute exact Lloyd means (and norms) from

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Multimodal column handling (SURVEY.md §2 H5 + the training-pipeline
   * mandate): image/audio/video travel as opaque `binary` columns with a
@@ -63,7 +64,7 @@ object Multimodal {
         new java.io.ByteArrayInputStream(bytes))
       if (img == null) None
       else Some((img.getWidth, img.getHeight, img.getRaster.getNumBands))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** FALLBACK decode for undecodable bytes (and the only path for
     * audio/video — no JDK demuxer): a rolling byte hash seeds
@@ -137,7 +138,7 @@ object Multimodal {
         javax.imageio.ImageIO.write(dst, "png", bos)
         Some((bos.toByteArray, dst.getRaster.getNumBands))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** FALLBACK resize for undecodable bytes: output = a
     * rolling-hash-seeded prefix whose length scales with the target
@@ -249,7 +250,7 @@ object Multimodal {
           Some((rate, ch, bits, dataSize / block))
         case _ => None
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** FALLBACK audio metadata for non-WAV bytes: rolling-hash-seeded
@@ -379,7 +380,7 @@ object Multimodal {
       if (w <= 0 || h <= 0 || bits <= 0 || fs.isEmpty) None
       else Some((VideoMeta(w, h, if (nf > 0) nf else fs.size, bits, fourcc),
         fs))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Top-down gray raster [y][x] of one UNCOMPRESSED 8-bit DIB frame
@@ -404,7 +405,7 @@ object Multimodal {
   def aviFrameImage(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
     try Option(javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(payload)))
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
 
   /** REAL AVI encode (the synthesis twin of [[decodeAvi]], and the only
     * pure-JDK way to MAKE a test video): gray rasters → 8-bit

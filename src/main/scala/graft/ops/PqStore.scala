@@ -141,31 +141,16 @@ object PqStore {
     * it was trained on a corpus that included the deleted vectors, the
     * same model-grain drift as [[append]]'s un-retrained codebook; the
     * exactness follow-up is [[rebuild]] (retrain + re-encode), as the
-    * class doc argues for every codebook change. Anti-join rewrite
-    * preserving the bucket spec, survivors staged (localCheckpoint)
-    * before the overwrite. Returns code rows removed.
-    * `beforeWrites` runs once the read-only counts are done, before
-    * the first write: a concurrent caller's write gate
-    * (`GovernanceQueries.parPhase`), which may abort the verb there.
+    * class doc argues for every codebook change. The rewrite is
+    * [[BucketedStore.Table.deleteIds]]; `beforeWrites` is its write
+    * gate. Returns code rows removed.
     */
   def delete(spark: SparkSession, vecIds: DataFrame, tag: String,
              beforeWrites: () => Unit = () => ()): Long = {
-    val cT = codesT(tag)
     require(spark.catalog.tableExists(cbT(tag)) &&
-      spark.catalog.tableExists(cT),
+      spark.catalog.tableExists(codesT(tag)),
       s"delete target $tag does not exist — buildOrLoad first")
-    val ids = BandIndex.takedownIds(spark, vecIds, "vec_id")
-    val t = spark.table(cT)
-    val removed = t.join(ids, Seq("vec_id"), "left_semi").count()
-    if (removed == 0L) return 0L
-    beforeWrites()
-    val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = t.join(ids, Seq("vec_id"), "left_anti")
-      .select(codes(tag).cols.map(col): _*)
-      .localCheckpoint()
-    codes(tag).write(staged, buckets, cluster = false)
-    spark.catalog.refreshTable(cT)
-    removed
+    codes(tag).deleteIds(spark, vecIds, "vec_id", beforeWrites)
   }
 
   /** Offline retrain: drop both tables and rebuild from the corpus —

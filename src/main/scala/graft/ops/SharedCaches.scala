@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Registry of the session-lifetime persisted relations the query
   * families share, so a full-surface run (Bench / Verify) can release
@@ -15,14 +16,27 @@ import org.apache.spark.sql.Dataset
   * mid-pass. Families are independent: nothing after the last minhash
   * consumer reads the minhash caches, so holding them is pure pressure.
   *
-  * Mechanics: each `persist()` site registers its DataFrame under a
-  * family key at materialization-registration time ([[track]] — the
-  * returned reference is the caller's own). A harness calls
-  * [[release]] after the family's last consumer (the [[consumers]] map
-  * is the contract; names are validated against the registry by
-  * SharedCachesSpec). Released relations rebuild transparently on next
-  * touch — release affects residency, never correctness — so a stale
-  * consumer list degrades performance only.
+  * Mechanics: the module owns both cache policies, so no caller
+  * repeats them.
+  *   - [[persist]] marks a relation for caching at the one storage
+  *     level every family uses (MEMORY_AND_DISK: a spill, never an OOM)
+  *     and registers it under its family.
+  *   - [[memo]] holds a value the driver constructs once per
+  *     (family, name, session, dir) — for a relation whose construction
+  *     runs driver work (a fixpoint loop, a collect) that a plan-level
+  *     cache cannot dedup. Builds are single-flight per key: a racing
+  *     consumer waits for the first build and gets its value, while
+  *     builds of other keys (a nested one included) proceed. Each
+  *     build registers one [[onRelease]] hook that evicts its entry; a
+  *     build that throws leaves neither, so the next call builds again.
+  *     A build whose value holds checkpoint blocks registers their
+  *     `Checkpoints.free` itself.
+  *
+  * A harness calls [[release]] after the family's last consumer (the
+  * [[consumers]] map is the contract; names are validated against the
+  * registry by SharedCachesSpec). Released relations rebuild
+  * transparently on next touch — release affects residency, never
+  * correctness — so a stale consumer list degrades performance only.
   *
   * At 100 TB the same discipline applies across jobs rather than
   * within one: a production pipeline materializes each family as a
@@ -149,13 +163,48 @@ object SharedCaches {
   private[graft] def hookCount(family: String): Int =
     hooks.get(family).map(_.size).getOrElse(0)
 
-  /** Register `df` (already marked for caching) under `family` and
-    * return it unchanged. Re-registration of an equivalent plan is fine:
-    * unpersist on a no-longer-cached plan is a no-op.
+  /** Persist `ds` at the shared storage level and register it under
+    * `family`; returns the persisted relation. Re-registering an
+    * equivalent plan is fine: unpersist on a no-longer-cached plan is a
+    * no-op.
     */
-  private[graft] def track[T <: Dataset[_]](family: String, df: T): T = {
-    refs.updateWith(family)(l => Some(df :: l.getOrElse(Nil)))
-    df
+  private[graft] def persist[T](family: String, ds: Dataset[T]): Dataset[T] = {
+    val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    refs.updateWith(family)(l => Some(p :: l.getOrElse(Nil)))
+    p
+  }
+
+  /** One memo entry: empty until its build returns. */
+  private final class Slot { var value: Option[Any] = None }
+
+  private val memos = scala.collection.concurrent.TrieMap
+    .empty[(String, String, SparkSession, String), Slot]
+
+  /** The value `build` constructs for (family, name, s, dir), built once
+    * per family lifetime — see Mechanics above. A consumer that waited
+    * on a slot which was evicted meanwhile (a failed build, or a
+    * release) retries against the current slot.
+    */
+  @annotation.tailrec
+  private[graft] def memo[T](family: String, name: String, s: SparkSession,
+                             dir: String)(build: => T): T = {
+    val key = (family, name, s, dir)
+    val slot = memos.getOrElseUpdate(key, new Slot)
+    val got = slot.synchronized {
+      if (!memos.get(key).exists(_ eq slot)) None
+      else slot.value.orElse {
+        val v = try build catch { case e: Throwable =>
+          memos.remove(key, slot); throw e
+        }
+        slot.value = Some(v)
+        onRelease(family)(() => memos.remove(key, slot))
+        slot.value
+      }
+    }
+    got match {
+      case Some(v) => v.asInstanceOf[T]
+      case None => memo(family, name, s, dir)(build)
+    }
   }
 
   /** Unpersist every relation registered under `family` (non-blocking;

@@ -95,12 +95,17 @@ object SimilarityQueries {
     * corpus members). ONE derivation shared by q_hybrid_fusion and
     * q_fusion_weight_sweep so the sweep prices exactly the lists the
     * declared fusion serves.
+    *
+    * Memoized ([[SharedCaches.memo]]): the legs' construction includes
+    * a driver-side term-universe collect, so plan-level caching cannot
+    * dedup it; both consumers would otherwise each re-pay the lexical
+    * DAAT pass and the ADC probe (~2.5 s of the family's ~5.9 s at
+    * sf0.1). Evicted with the Embeddings family's release, so each
+    * bench pass / re-migration re-derives.
     */
   private def fusionLegs(s: SparkSession, dir: String
                         ): (DataFrame, DataFrame) =
-    // synchronized for the same reason as [[exactRanked]] (r18 ADVICE
-    // #4): the initializer's persist/track/onRelease must run once.
-    fusionLegsMemo.synchronized { fusionLegsMemo.getOrElseUpdate((s, dir), {
+    SharedCaches.memo(SharedCaches.Embeddings, "fusionLegs", s, dir) {
       val q = pqQueries(s, dir)
       // lexical leg: the standing LexIndex over the full corpus (the
       // q_bm25 tag); panel terms = each query doc's distinct tokens,
@@ -123,26 +128,9 @@ object SimilarityQueries {
       val vecTop = pqAdcScoredWithin(s, dir, cand)
         .filter(col("rank") <= FuseN)
         .select(col("query_id"), col("vec_id"), col("rank"))
-      val legs = (
-        SharedCaches.track(SharedCaches.Embeddings, lexTop
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-        SharedCaches.track(SharedCaches.Embeddings, vecTop
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-      SharedCaches.onRelease(SharedCaches.Embeddings)(() =>
-        fusionLegsMemo.remove((s, dir)))
-      legs
-    }) }
-
-  /** Memoized [[fusionLegs]] per (session, dir) — the ccMemo pattern:
-    * the legs' construction includes a driver-side term-universe
-    * collect, so plan-level caching cannot dedup it; both consumers
-    * (q_hybrid_fusion, q_fusion_weight_sweep) would otherwise each
-    * re-pay the lexical DAAT pass and the ADC probe (~2.5 s of the
-    * family's ~5.9 s at sf0.1). Evicted with the Embeddings family's
-    * release, so each bench pass / re-migration re-derives.
-    */
-  private val fusionLegsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+      (SharedCaches.persist(SharedCaches.Embeddings, lexTop),
+        SharedCaches.persist(SharedCaches.Embeddings, vecTop))
+    }
 
   /** Weights the fusion sweep prices: w is the LEXICAL reciprocal's
     * share (0 = pure vector, 1 = pure lexical, 0.5 ≡ unweighted RRF —
@@ -559,12 +547,11 @@ object SimilarityQueries {
     * MEMORY_AND_DISK makes it a disk-backed artifact, not an OOM risk.
     */
   private def corpus(s: SparkSession, dir: String): DataFrame =
-    SharedCaches.track(SharedCaches.Embeddings,
+    SharedCaches.persist(SharedCaches.Embeddings,
       Tables.t(s, dir, "embeddings")
         .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
         .withColumn("nrm", l2Norm(col("v")))
-        .withColumn("bucket", hyperplaneBucket(col("v"), planes))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumn("bucket", hyperplaneBucket(col("v"), planes)))
 
   private def rankW = org.apache.spark.sql.expressions.Window
     .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
@@ -585,31 +572,19 @@ object SimilarityQueries {
     * 100 TB the truth leg is panel-bounded (queries × corpus touched
     * once instead of 13×) — the same argument, bigger constant.
     */
-  private val exactRankedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  // r19 (r18 ADVICE #4): memo initializers have side effects (persist +
-  // SharedCaches.track + onRelease registration); TrieMap.getOrElseUpdate
-  // may run a racing initializer twice and keep one, double-registering
-  // cache refs and release hooks. Serialize initialization — queries now
-  // run from driver thread pools (takedown audit), so "consumers are
-  // sequential" is no longer a structural guarantee.
   private def exactRanked(s: SparkSession, dir: String): DataFrame =
-    exactRankedMemo.synchronized { exactRankedMemo.getOrElseUpdate((s, dir), {
+    SharedCaches.memo(SharedCaches.Embeddings, "exactRanked", s, dir) {
       val e = corpus(s, dir)
       val q = e.filter(expr(QueryPred))
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val ranked = broadcast(q).crossJoin(e.drop("bucket"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-        .withColumn("rank", row_number().over(rankW))
-        .filter(col("rank") <= MmrShortlist)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      SharedCaches.track(SharedCaches.Embeddings, ranked)
-      SharedCaches.onRelease(SharedCaches.Embeddings)(() =>
-        exactRankedMemo.remove((s, dir)))
-      ranked
-    }) }
+      SharedCaches.persist(SharedCaches.Embeddings,
+        broadcast(q).crossJoin(e.drop("bucket"))
+
+          .filter(col("query_id") =!= col("vec_id"))
+          .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
+          .withColumn("rank", row_number().over(rankW))
+          .filter(col("rank") <= MmrShortlist))
+    }
 
   private[ops] def exactTopK(s: SparkSession, dir: String,
                              k: Int = K): DataFrame = {
@@ -862,10 +837,8 @@ object SimilarityQueries {
   private[ops] def ivfParts(s: SparkSession, dir: String,
                             nCells: Int = NCells): (DataFrame, DataFrame) = {
     val (a2, centn) = buildIvf(corpus(s, dir).drop("bucket"), nCells)
-    (SharedCaches.track(SharedCaches.Embeddings,
-      a2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-      SharedCaches.track(SharedCaches.Embeddings,
-        centn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    (SharedCaches.persist(SharedCaches.Embeddings, a2),
+      SharedCaches.persist(SharedCaches.Embeddings, centn))
   }
 
   /** The normalized corpus for index builders ([[IvfIndex]]). */
@@ -2336,14 +2309,13 @@ object SimilarityQueries {
         // (tracked under the Embeddings family, whose consumers list
         // already names this query) so the 15 legs read one tiny
         // cached relation.
-        val joined = SharedCaches.track(SharedCaches.Embeddings, lexTop
+        val joined = SharedCaches.persist(SharedCaches.Embeddings, lexTop
           .select(col("query_id"), col("vec_id"), col("rank").as("lrank"))
           .join(vecTop
               .select(col("query_id"), col("vec_id"), col("rank").as("vrank")),
             Seq("query_id", "vec_id"), "full")
           .withColumn("rl", rrfOf(col("lrank")))
-          .withColumn("rv", rrfOf(col("vrank")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .withColumn("rv", rrfOf(col("vrank"))))
         val exact = exactTopK(s, dir)
         val ex = exact.filter(col("rank") <= K)
           .select(col("query_id"), col("vec_id"))
