@@ -152,7 +152,9 @@ object Bench {
     def onePass(): Map[String, Double] = {
       // Warmup/previous-pass caches are dead weight for this pass
       // (warmup dir -> different plans; prior pass -> pre-built working
-      // set). Clear so every pass builds exactly its own.
+      // set). Clear so every pass builds exactly its own, releasing
+      // every family first so no memo outlives its cache.
+      ops.SharedCaches.consumers.keys.foreach(ops.SharedCaches.release)
       spark.sharedState.cacheManager.clearCache()
       names.map { name =>
         val t0 = System.nanoTime()

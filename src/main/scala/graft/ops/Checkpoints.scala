@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, GraftSqlBridge}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Explicit release of `localCheckpoint()` block storage.
@@ -19,8 +19,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * rebuild floor under `q_dedup_recall`).
   *
   * [[free]] walks a Dataset's analyzed plan, finds every `LogicalRDD`
-  * leaf, and unpersists its RDD directly — deterministic reclamation at
-  * the moment a loop round (or a whole family) is superseded.
+  * leaf, and drops its RDD's blocks directly (`SparkContext.unpersistRDD`:
+  * `RDD.unpersist` WARNs for each locally checkpointed RDD, i.e. every
+  * one freed here) — deterministic reclamation at the moment a loop
+  * round (or a whole family) is superseded.
   *
   * SAFETY: a locally-checkpointed RDD has its lineage truncated — once
   * its blocks are dropped the data is unrecoverable, and any later read
@@ -30,13 +32,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Checkpoints {
 
-  /** Unpersist the RDD behind every `LogicalRDD` leaf of `ds`'s analyzed
-    * plan (non-blocking). No-op for plans with no checkpoint leaf, so it
-    * is safe to call uniformly — e.g. on a loop's round-0 state that was
-    * never checkpointed.
+  /** Drop the blocks of the RDD behind every `LogicalRDD` leaf of `ds`'s
+    * analyzed plan (non-blocking). No-op for plans with no checkpoint
+    * leaf, so it is safe to call uniformly — e.g. on a loop's round-0
+    * state that was never checkpointed.
     */
   def free(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed.collect {
       case l: LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    }.foreach(GraftSqlBridge.unpersistRDD)
 }

@@ -87,9 +87,9 @@ object DedupQueries {
     * consumer). */
   private def containGramsPersisted(s: org.apache.spark.sql.SparkSession,
                                     dir: String): DataFrame =
-    SharedCaches.persist(SharedCaches.ContainGrams,
-      ngramDocs(Tables.par(s, dir, "documents")))
-
+    SharedCaches.memo(SharedCaches.ContainGrams, "grams", s, dir)(
+      SharedCaches.persist(SharedCaches.ContainGrams,
+        ngramDocs(Tables.par(s, dir, "documents"))))
 
   /** Published-SemDeDup operating point (Abbas et al. use τ near 0.99 on
     * near-identical pairs). The shipped corpora have NO natural pairs
@@ -193,34 +193,18 @@ object DedupQueries {
 
   /** The shingle relation, persisted: consumed by the band pipeline and
     * both Jaccard-verify legs, and by ALL of q_doc_dedup /
-    * q_dedup_clusters / q_dedup_incremental (CacheManager matches the
-    * canonicalized plan, so one materialization serves every consumer in
-    * the session). At 100 TB this is the classic cache-vs-recompute knob:
+    * q_dedup_clusters / q_dedup_incremental, one materialization per
+    * session. At 100 TB this is the classic cache-vs-recompute knob:
     * the relation is ~shingle-count x k bytes, so MEMORY_AND_DISK makes
     * it a disk-backed spill; dropping the persist trades extra scans for
     * zero cache footprint — both plans are correct.
     */
   private def shinglesPersisted(s: org.apache.spark.sql.SparkSession,
                                 dir: String): DataFrame =
-    SharedCaches.persist(SharedCaches.Minhash,
-      shingleDf(Tables.par(s, dir, "documents")))
+    SharedCaches.memo(SharedCaches.Minhash, "shingles", s, dir)(
+      SharedCaches.persist(SharedCaches.Minhash,
+        shingleDf(Tables.par(s, dir, "documents"))))
 
-
-  /** The (doc_id, band, band_hash) LSH band index, persisted: it is the
-    * dedup family's stored artifact — the relation an incremental ingest
-    * joins against — and the seeded-md5 MinHash pass that builds it
-    * dominates pipeline cost, so the self-join legs, the cluster query,
-    * and both sides of the incremental query read one materialization.
-    */
-  private def bandsPersisted(sh: DataFrame): DataFrame =
-    SharedCaches.persist(SharedCaches.Minhash, bandsFromShingles(sh))
-
-  /** MinHash+LSH verified near-dup pairs (the q_doc_dedup pipeline),
-    * shared with the cluster-consolidation query so both stay one code
-    * path. Returns (doc_a, doc_b, j) with doc_a < doc_b, j >= threshold,
-    * persisted (edges ≪ corpus; the shared output of q_doc_dedup and
-    * q_dedup_clusters).
-    */
   /** (doc_id [, passthrough...], band, band_hash) rows for any relation
     * carrying `doc_id` + `text` — the same ShingleK/Bands/RowsPerBand
     * expressions as the batch pipeline, usable on a STREAMING input
@@ -282,8 +266,8 @@ object DedupQueries {
     * exchange via ReuseExchange (both legs are the identical capped
     * subplan; verified `ReusedExchange` over the capped relation's
     * hashpartitioning(band, bh)). join-back references `bands` twice,
-    * but `bands` is the PERSISTED band relation (bandsPersisted), so
-    * the second reference is a cache read. The exact-Jaccard verify
+    * but `bands` is the PERSISTED band relation ([[candidatesPersisted]]),
+    * so the second reference is a cache read. The exact-Jaccard verify
     * joins the (small) candidate set back to the shingle sets.
     */
   private def candidateJaccard(sh: DataFrame, bands: DataFrame): DataFrame = {
@@ -313,19 +297,23 @@ object DedupQueries {
     * q_doc_similar re-run the whole verify pipeline: measured 4.5 s vs
     * ~0.3 s for the other cached consumers at sf0.1.) Candidates are
     * edges ≪ corpus at any scale; same cache-vs-recompute knob as the
-    * shingle relation.
+    * shingle relation. The build persists the band relation too: its
+    * md5 pass dominates, and [[candidateJaccard]] reads it twice.
     */
   private def candidatesPersisted(s: org.apache.spark.sql.SparkSession,
-                                  dir: String): DataFrame = {
-    val sh = shinglesPersisted(s, dir)
-    SharedCaches.persist(SharedCaches.Minhash,
-      candidateJaccard(sh, bandsPersisted(sh)))
+                                  dir: String): DataFrame =
+    SharedCaches.memo(SharedCaches.Minhash, "candidates", s, dir) {
+      val sh = shinglesPersisted(s, dir)
+      SharedCaches.persist(SharedCaches.Minhash, candidateJaccard(sh,
+        SharedCaches.persist(SharedCaches.Minhash, bandsFromShingles(sh))))
+    }
 
-  }
-
+  /** The verified pairs: a memoized view of the candidate cache (the
+    * filter needs no cache of its own), shared by every pair consumer. */
   private[ops] def minhashPairs(s: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame =
-    candidatesPersisted(s, dir).filter(col("j") >= MinhashVerifyJ)
+    SharedCaches.memo(SharedCaches.Minhash, "pairs", s, dir)(
+      candidatesPersisted(s, dir).filter(col("j") >= MinhashVerifyJ))
 
   /** DuckDB CTE chain ending in `cand(doc_a, doc_b, j)` — the oracle twin
     * of [[candidateJaccard]] (pre-threshold LSH candidates with exact
@@ -426,13 +414,12 @@ object DedupQueries {
 
   /** [[simhashFps]] persisted under its [[SharedCaches]] family: three
     * declared consumers (equality clustering, Hamming banding, the
-    * recall measurement) share ONE fingerprint corpus pass per session
-    * — CacheManager matches the canonicalized plan, so each call's
-    * persist() lands on the same materialization.
+    * recall measurement) share ONE fingerprint corpus pass per session.
     */
   private def simhashFpsPersisted(s: org.apache.spark.sql.SparkSession,
                                   dir: String): DataFrame =
-    SharedCaches.persist(SharedCaches.Simhash, simhashFps(s, dir))
+    SharedCaches.memo(SharedCaches.Simhash, "fps", s, dir)(
+      SharedCaches.persist(SharedCaches.Simhash, simhashFps(s, dir)))
 
   /** DuckDB twin of [[simhashFps]] ending in `fp(doc_id, simhash)`. */
   private val simhashFpSqlCtes: String = {
@@ -534,7 +521,8 @@ object DedupQueries {
     */
   private def simhashHammingPersisted(s: org.apache.spark.sql.SparkSession,
                                       dir: String): DataFrame =
-    SharedCaches.persist(SharedCaches.Simhash, simhashHammingPairs(s, dir))
+    SharedCaches.memo(SharedCaches.Simhash, "hamming", s, dir)(
+      SharedCaches.persist(SharedCaches.Simhash, simhashHammingPairs(s, dir)))
 
   /** DuckDB twin of [[simhashHammingPairs]] ending in
     * `shham(doc_a, doc_b, hamming)`; callers must have

@@ -22,15 +22,21 @@ import org.apache.spark.storage.StorageLevel
   *     level every family uses (MEMORY_AND_DISK: a spill, never an OOM)
   *     and registers it under its family.
   *   - [[memo]] holds a value the driver constructs once per
-  *     (family, name, session, dir) — for a relation whose construction
-  *     runs driver work (a fixpoint loop, a collect) that a plan-level
-  *     cache cannot dedup. Builds are single-flight per key: a racing
+  *     (family, name, session, dir) — a shared relation, including one
+  *     whose construction runs driver work (a fixpoint loop, a
+  *     collect). Builds are single-flight per key: a racing
   *     consumer waits for the first build and gets its value, while
   *     builds of other keys (a nested one included) proceed. Each
   *     build registers one [[onRelease]] hook that evicts its entry; a
   *     build that throws leaves neither, so the next call builds again.
   *     A build whose value holds checkpoint blocks registers their
   *     `Checkpoints.free` itself.
+  *
+  * The rule: a relation read by more than one construction is a
+  * [[memo]] whose build persists it; a bare [[persist]] is for one read
+  * several times within ONE construction (a query body, a memo build).
+  * Memos are keyed on `dir`, not its files: a writer rewriting a table
+  * mid-session releases the families reading it (`Pipeline` does).
   *
   * A harness calls [[release]] after the family's last consumer (the
   * [[consumers]] map is the contract; names are validated against the
@@ -164,9 +170,7 @@ object SharedCaches {
     hooks.get(family).map(_.size).getOrElse(0)
 
   /** Persist `ds` at the shared storage level and register it under
-    * `family`; returns the persisted relation. Re-registering an
-    * equivalent plan is fine: unpersist on a no-longer-cached plan is a
-    * no-op.
+    * `family`; returns the persisted relation.
     */
   private[graft] def persist[T](family: String, ds: Dataset[T]): Dataset[T] = {
     val p = ds.persist(StorageLevel.MEMORY_AND_DISK)

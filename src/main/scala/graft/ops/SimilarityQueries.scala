@@ -542,16 +542,17 @@ object SimilarityQueries {
     * the ANN system's prepared index side — every similarity query (and
     * both legs of each: query rows AND corpus rows come from it) starts
     * here, so the normalize+bucket scan is materialized once per session
-    * and every consumer across queries hits the CacheManager entry. At
-    * 100 TB this is the index you'd precompute and store anyway;
-    * MEMORY_AND_DISK makes it a disk-backed artifact, not an OOM risk.
+    * for every consumer across queries. At 100 TB this is the index
+    * you'd precompute and store anyway; MEMORY_AND_DISK makes it a
+    * disk-backed artifact, not an OOM risk.
     */
-  private def corpus(s: SparkSession, dir: String): DataFrame =
-    SharedCaches.persist(SharedCaches.Embeddings,
-      Tables.t(s, dir, "embeddings")
-        .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-        .withColumn("nrm", l2Norm(col("v")))
-        .withColumn("bucket", hyperplaneBucket(col("v"), planes)))
+  private[ops] def corpus(s: SparkSession, dir: String): DataFrame =
+    SharedCaches.memo(SharedCaches.Embeddings, "corpus", s, dir)(
+      SharedCaches.persist(SharedCaches.Embeddings,
+        Tables.t(s, dir, "embeddings")
+          .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
+          .withColumn("nrm", l2Norm(col("v")))
+          .withColumn("bucket", hyperplaneBucket(col("v"), planes))))
 
   private def rankW = org.apache.spark.sql.expressions.Window
     .partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
@@ -579,7 +580,6 @@ object SimilarityQueries {
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
       SharedCaches.persist(SharedCaches.Embeddings,
         broadcast(q).crossJoin(e.drop("bucket"))
-
           .filter(col("query_id") =!= col("vec_id"))
           .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
           .withColumn("rank", row_number().over(rankW))
@@ -831,15 +831,15 @@ object SimilarityQueries {
   /** Session-cached IVF parts (the in-memory face; the STORED face is
     * [[IvfIndex]], which materializes the same build as bucketed
     * tables): persist both sides so every same-session consumer scores
-    * against one materialization instead of re-running
-    * seed/Lloyd/assign.
+    * against one materialization instead of re-running seed/Lloyd/assign.
     */
   private[ops] def ivfParts(s: SparkSession, dir: String,
-                            nCells: Int = NCells): (DataFrame, DataFrame) = {
-    val (a2, centn) = buildIvf(corpus(s, dir).drop("bucket"), nCells)
-    (SharedCaches.persist(SharedCaches.Embeddings, a2),
-      SharedCaches.persist(SharedCaches.Embeddings, centn))
-  }
+                            nCells: Int = NCells): (DataFrame, DataFrame) =
+    SharedCaches.memo(SharedCaches.Embeddings, s"ivfParts/$nCells", s, dir) {
+      val (a2, centn) = buildIvf(corpus(s, dir).drop("bucket"), nCells)
+      (SharedCaches.persist(SharedCaches.Embeddings, a2),
+        SharedCaches.persist(SharedCaches.Embeddings, centn))
+    }
 
   /** The normalized corpus for index builders ([[IvfIndex]]). */
   private[ops] def normalizedCorpus(s: SparkSession, dir: String): DataFrame =

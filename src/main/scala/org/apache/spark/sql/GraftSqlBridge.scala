@@ -11,6 +11,10 @@ object GraftSqlBridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `RDD.unpersist(blocking = false)` minus its locally-checkpointed WARN. */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Eager local checkpoint that does NOT inherit the source plan's
     * estimated statistics.
     *
