@@ -290,7 +290,7 @@ object Pipeline {
       val tag = graft.ops.BandIndex.tag(outDir, "full")
       val ((skB, skR), secs) = timed {
         graft.ops.BandIndex.buildOrLoad(spark,
-          spark.read.parquet(s"$outDir/$t.parquet"), tag, log)
+          spark.read.parquet(s"$outDir/$t.parquet"), tag)
         graft.ops.BandIndex.hotBucketAudit(spark, tag, a.hotBucketCap)
       }
       val msg = s"tag=$tag buckets=${graft.ops.BandIndex.buckets(spark, tag)} " +
@@ -363,7 +363,7 @@ object Pipeline {
       // the split is maintenance for indexes that have LIVED.
       val preExisting = graft.ops.IvfIndex.exists(spark, t)
       val (_, secs) = timed {
-        graft.ops.IvfIndex.buildOrLoad(spark, outDir, cells, log)
+        graft.ops.IvfIndex.buildOrLoad(spark, outDir, cells)
       }
       // balance maintenance (r13 verdict #3): split any cell grown past
       // 2x the mean on a PRE-EXISTING index; the report row carries the
@@ -386,13 +386,17 @@ object Pipeline {
         else (0, -1L, -1L)
       }
       val (nVec, nUsed, maxCell) = graft.ops.IvfIndex.cellStats(spark, t)
+      // list balance decides probe cost: a corpus collapsing into few
+      // cells, or one cell holding 30% of the vectors, quantizes badly
+      val unbalanced =
+        nUsed * 2 < cells || (nVec > 0 && maxCell * 10 > nVec * 3)
       val balanceMsg =
         if (!preExisting) "split=skipped_fresh_build merge=skipped_fresh_build"
         else s"split_cells=$nSplit max_before=$maxBefore max_after=$maxAfter " +
           s"merged_cells=$nMerged min_before=$minBefore min_after=$minAfter"
       val msg = s"tag=$t buckets=${graft.ops.IvfIndex.buckets(spark, t)} " +
         s"cells=$cells used=$nUsed vectors=$nVec max_cell=$maxCell $balanceMsg"
-      if (nSplit > 0 || nMerged > 0)
+      if (nSplit > 0 || nMerged > 0 || unbalanced)
         log.warn("embeddings", "artifact ivf_index", msg)
       else log.info("embeddings", "artifact ivf_index", msg)
       Seq(Report.ArtifactResult("embeddings", "ivf_index", msg, 0L, 0L,

@@ -218,7 +218,6 @@ object BandIndex {
     */
   def buildOrLoad(spark: SparkSession, standingDocs: DataFrame,
                   tag: String,
-                  log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
                   targetRowsPerBucket: Long = TargetRowsPerBucket
                  ): (DataFrame, DataFrame) = {
     val shT = s"${tag}_shingles"
@@ -252,14 +251,6 @@ object BandIndex {
         // fresh build is exact everywhere — an empty touched ledger
         touched(tag).ensure(spark)
       } finally sh.unpersist()
-      // Readers cap hot buckets with `bsz <= HotBucketCap`; surface what
-      // that cap will silently skip, once, at build time (the stored bsz
-      // makes this a cheap scan-side aggregate).
-      val (nBuckets, nRows) = hotBucketAudit(spark, tag)
-      val msg = s"hot_bucket_cap=${DedupQueries.HotBucketCap} " +
-        s"skipped_buckets=$nBuckets skipped_rows=$nRows"
-      if (nBuckets > 0) log.warn(bdT, "band_index_build", msg)
-      else log.info(bdT, "band_index_build", msg)
     }
     (spark.table(shT), spark.table(bdT))
   }
@@ -273,8 +264,8 @@ object BandIndex {
 
   /** What the hot-bucket cap will silently skip on the stored index:
     * (over-cap buckets, rows inside them). Scan-only — `bsz` is a
-    * stored column — so the pipeline can surface every silent cap as a
-    * report line without a window over the index.
+    * stored column — so the pipeline's artifact row surfaces every
+    * silent cap without a window over the index.
     */
   def hotBucketAudit(spark: SparkSession, tag: String,
                      cap: Int = DedupQueries.HotBucketCap): (Long, Long) = {
@@ -293,7 +284,10 @@ object BandIndex {
     * hot-bucket cap errs toward keeping buckets until the next
     * [[refreshBucketSizes]]; already-capped buckets stay capped (their
     * standing rows keep the over-cap bsz). Staleness is bounded by the
-    * refresh cadence.
+    * refresh cadence. A failed band insert drops the band table before
+    * rethrowing (the LexIndex stats-overwrite behaviour): the shingle
+    * table already holds the batch, so [[exists]] must read false and
+    * the next [[buildOrLoad]] rebuild, never serve bands that miss it.
     */
   def append(spark: SparkSession, newDocs: DataFrame, tag: String): Unit = {
     val shT = s"${tag}_shingles"
@@ -308,7 +302,11 @@ object BandIndex {
       // ledger first (crash order), then the rows
       touched(tag).record(spark, batch)
       sh.write.insertInto(shT)
-      bands(tag).insert(withKeyCount(batch, Seq("band", "bh"), "bsz"), nb)
+      try bands(tag).insert(withKeyCount(batch, Seq("band", "bh"), "bsz"), nb)
+      catch { case e: Throwable =>
+        spark.sql(s"DROP TABLE IF EXISTS $bdT")
+        throw e
+      }
     } finally sh.unpersist()
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Stored IVF vector index — the third stored-artifact family (after
   * [[BandIndex]] and [[SpanSet]]): the cell assignment and refined
   * centroids the ANN queries score against, materialized as tables
-  * instead of rebuilt (or merely session-cached) per run.
+  * instead of rebuilt per run.
   *
   * Two tables per (corpus snapshot, cell count):
   *
@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * Bucketing on `cell` makes the inverted-list side scan-only for a
   * shuffled probe join, and keeps each cell's vectors co-located for
   * within-cell passes (the semantic-dedup self-join); the centroid
-  * table is ~√n rows and broadcasts at any corpus scale. The build is
-  * the SAME deterministic seed/Lloyd/assign pipeline as the
-  * session-cached path ([[SimilarityQueries.buildIvf]] — one
-  * definition, no drift), so stored and cached results are identical
-  * and the DuckDB oracle stays bit-comparable.
+  * table is ~√n rows and broadcasts at any corpus scale. The build
+  * writes [[SimilarityQueries.ivfCentroids]] and assigns cells against
+  * the stored table, so it equals [[SimilarityQueries.buildIvf]] row
+  * for row and the DuckDB oracle stays bit-comparable. Every
+  * assignment, seed and mean below is a [[Quantizer]] rule.
   *
   * Maintenance mirrors the other artifacts: [[append]] assigns a new
   * batch against the EXISTING centroids and inserts its cell rows
@@ -81,7 +81,6 @@ object IvfIndex {
     * of the stored tables.
     */
   def buildOrLoad(spark: SparkSession, dir: String, nCells: Int,
-                  log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
                   targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
                  ): (DataFrame, DataFrame) =
     // Cell-row cardinality == corpus cardinality (one row per vector),
@@ -89,7 +88,7 @@ object IvfIndex {
     // no extra corpus pass.
     buildOrLoadVectors(spark,
       SimilarityQueries.normalizedCorpus(spark, dir), tag(dir, nCells),
-      nCells, log, targetRowsPerBucket,
+      nCells, targetRowsPerBucket,
       nRows = () => graft.Tables.t(spark, dir, "embeddings").count())
 
   /** [[buildOrLoad]] for an ARBITRARY normalized vector relation
@@ -106,40 +105,32 @@ object IvfIndex {
     */
   def buildOrLoadVectors(spark: SparkSession, vectors: => DataFrame,
                          t: String, nCells: Int,
-                         log: graft.etl.MigrationLog =
-                           graft.etl.MigrationLog.silent,
                          targetRowsPerBucket: Long =
                            BandIndex.TargetRowsPerBucket,
                          nRows: () => Long = null
                         ): (DataFrame, DataFrame) = {
     val (cT, mT) = (cellsT(t), centT(t))
-    // Gate on BOTH tables: cT is written first, so a crash before mT
-    // lands would otherwise leave a half-built index that short-circuits
-    // every later call into a missing-table error (the ContainIndex
-    // self-heal fix, applied to the one other family that writes its
-    // gate table first).
+    // Gate on BOTH tables: mT is written first and cT is assigned
+    // against it, so a crash before cT lands leaves centroids without
+    // cells, which the gate turns into a rebuild rather than a
+    // missing-table error on every later call (the ContainIndex
+    // self-heal fix).
     if (!(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT))) {
       BucketedStore.dropStaleLocations(spark, Seq(cT, mT))
       val vecs = vectors
       val buckets = BandIndex.derivedBuckets(
         if (nRows != null) nRows() else vecs.count(), targetRowsPerBucket)
-      val (a2, centn) = SimilarityQueries.buildIvf(vecs, nCells)
-      cellTable(t).write(a2, buckets)
-      centn.write.mode(SaveMode.Overwrite).saveAsTable(mT)
-      // Build-time audit: list balance decides probe cost — a corpus
-      // collapsing into few cells quantizes badly and deserves a loud
-      // line (the hot-bucket convention applied to inverted lists).
-      val (nVec, nUsed, maxCell) = cellStats(spark, t)
-      val msg = s"cells=$nCells used=$nUsed vectors=$nVec max_cell=$maxCell"
-      if (nUsed * 2 < nCells || (nVec > 0 && maxCell * 10 > nVec * 3))
-        log.warn(cT, "ivf_index_build", msg)
-      else log.info(cT, "ivf_index_build", msg)
+      // one seed → Lloyd pass: the cell write reads the stored centroids
+      SimilarityQueries.ivfCentroids(vecs, nCells)
+        .write.mode(SaveMode.Overwrite).saveAsTable(mT)
+      cellTable(t).write(
+        SimilarityQueries.assignCells(vecs, spark.table(mT)), buckets)
     }
     (spark.table(cT), spark.table(mT))
   }
 
   /** (total vectors, occupied cells, largest cell) on the stored index
-    * — scan-only balance audit for logs and pipeline report rows.
+    * — scan-only balance audit for the pipeline report row.
     */
   def cellStats(spark: SparkSession, tag: String): (Long, Long, Long) = {
     val r = spark.table(cellsT(tag))
@@ -159,19 +150,11 @@ object IvfIndex {
     * until [[refreshCentroids]].
     */
   def append(spark: SparkSession, newVectors: DataFrame, tag: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val (cT, mT) = (cellsT(tag), centT(tag))
     require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
       s"append target $tag does not exist — buildOrLoad first")
-    val centn = spark.table(mT)
-    val w = Window.partitionBy("vec_id").orderBy(col("cosc").desc, col("cell").asc)
-    newVectors.crossJoin(broadcast(centn))
-      .withColumn("cosc",
-        graft.functions.VectorFunctions.dot(col("v"), col("cv"))
-          / (col("nrm") * col("cn")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("vec_id", "v", "nrm", "cell")
+    SimilarityQueries.assignCells(
+      newVectors.select(col("vec_id"), col("v"), col("nrm")), spark.table(mT))
       .write.insertInto(cT)
   }
 
@@ -184,19 +167,18 @@ object IvfIndex {
     * every cell larger than `factor` × the mean cell size splits into
     * two children via one LOCAL Lloyd step —
     *
-    *   - child seeds = the cell's first two vectors by
-    *     (md5(vec_id), vec_id) — the buildIvf seed rule applied within
-    *     the cell, so the split is deterministic and engine-independent;
+    *   - child seeds = the cell's first two vectors by the
+    *     [[Quantizer.seeds]] rule applied within the cell, so the split
+    *     is deterministic and engine-independent;
     *   - each of the cell's vectors reassigns to its nearest child seed
-    *     (cosine desc, child-id asc tiebreak — the assignment rule
-    *     verbatim); child cell ids are max(existing cell id) + the
-    *     seed's rank in (parent asc, seed-rank asc) order — NOT the
-    *     seed vec_ids: a build seed can end up refined into a
-    *     DIFFERENT cell, so a member's vec_id may equal a COLD cell's
-    *     id and reusing it would merge two unrelated cells;
-    *   - child centroids = decimal-exact means of the reassigned
-    *     members (the [[refreshCentroids]] expression); the parent
-    *     centroid row is removed.
+    *     ([[Quantizer.nearest]] within the cell); child cell ids are
+    *     max(existing cell id) + the seed's rank in (parent asc,
+    *     seed-rank asc) order — NOT the seed vec_ids: a build seed can
+    *     end up refined into a DIFFERENT cell, so a member's vec_id may
+    *     equal a COLD cell's id and reusing it would merge two
+    *     unrelated cells;
+    *   - child centroids = [[Quantizer.means]] of the reassigned
+    *     members; the parent centroid row is removed.
     *
     * Cold cells' rows and centroids are untouched (IvfIndexSpec pins
     * both, plus reassignment == an independent recomputation and the
@@ -220,7 +202,6 @@ object IvfIndex {
     */
   def splitHotCells(spark: SparkSession, tag: String,
                     factor: Double = 2.0): (Int, Long, Long) = {
-    import org.apache.spark.sql.expressions.Window
     val (cT, mT) = (cellsT(tag), centT(tag))
     require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
       s"split target $tag does not exist — buildOrLoad first")
@@ -255,45 +236,25 @@ object IvfIndex {
       }.toDF("cell", "sr", "child"))
       val hotSet = broadcast(hot.toDF("cell"))
       val hotRows = cells.join(hotSet, Seq("cell"), "left_semi")
-      // two deterministic child seeds per hot cell (the build seed rule,
-      // applied locally — a cell-partitioned window, parallel per cell)
-      val wSeed = Window.partitionBy("cell")
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      val seeds = hotRows.withColumn("sr", row_number().over(wSeed))
-        .filter(col("sr") <= 2)
+      // two deterministic child seeds per hot cell, as centroids of
+      // their parent
+      val seeds = Quantizer.seeds(hotRows, 2, Seq("cell"))
         .join(childMap, Seq("cell", "sr"))
-        .select(col("cell"), col("child"),
-          col("v").as("sv"), col("nrm").as("sn"))
-      val wA = Window.partitionBy("vec_id")
-        .orderBy(col("cosc").desc, col("child").asc)
-      val reassigned = hotRows.join(seeds, "cell")
-        .withColumn("cosc",
-          graft.functions.VectorFunctions.dot(col("v"), col("sv"))
-            / (col("nrm") * col("sn")))
-        .withColumn("rn", row_number().over(wA))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("v"), col("nrm"),
-          col("child").as("cell"))
+        .select(col("cell").as("parent"), col("child").as("cell"),
+          col("v").as("cv"), col("nrm").as("cn"))
+      val reassigned = Quantizer.nearest(
+          hotRows.withColumnRenamed("cell", "parent"), seeds, 1,
+          within = Seq("parent"))
+        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
       val buckets = BandIndex.bucketsOf(spark, cT)
       val stagedCells = cells.join(hotSet, Seq("cell"), "left_anti")
         .unionByName(reassigned)
         .localCheckpoint()
-      // child centroids: the refreshCentroids expression over the
-      // reassigned members only; cold centroids ride through unchanged
-      import org.apache.spark.sql.types.DecimalType
-      val cm = reassigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos0", "val")))
-        .groupBy(col("cell"), (col("pos0") + lit(1)).as("pos"))
-        .agg((sum(col("val").cast(DecimalType(30, 15))).cast("double") /
-          count(lit(1))).as("m"))
-      val childCents = cm.groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("cv"))
-        .withColumn("cn",
-          sqrt(graft.functions.VectorFunctions.dot(col("cv"), col("cv"))))
+      // child centroids: the means of the reassigned members only; cold
+      // centroids ride through unchanged
       val stagedCents = spark.table(mT)
         .join(hotSet, Seq("cell"), "left_anti")
-        .unionByName(childCents)
+        .unionByName(Quantizer.means(reassigned, Seq("cell")))
         .localCheckpoint()
       // Crash-safe write order (r14 review): both staged relations are
       // materialized, so BREAK the buildOrLoad gate first — drop the
@@ -327,9 +288,9 @@ object IvfIndex {
     * because the sizes relation only carries occupied cells (r15
     * advice): their centroids anti-join away with no members to move.
     * An occupied cold cell's members reassign to their nearest
-    * SURVIVING (non-retired) centroid by the [[append]] assignment rule
-    * VERBATIM (cosine desc, cell asc tiebreak — IvfIndexSpec pins
-    * merge == an independent recomputation), and its centroid row is
+    * SURVIVING (non-retired) centroid by the [[append]] assignment
+    * (IvfIndexSpec pins merge == an independent recomputation), and
+    * its centroid row is
     * removed. Surviving centroids do NOT move — the append staleness
     * contract; [[refreshCentroids]] is the exactness follow-up — and
     * surviving cells' member rows are byte-untouched except for the
@@ -357,7 +318,6 @@ object IvfIndex {
     */
   def mergeColdCells(spark: SparkSession, tag: String,
                      factor: Double = 2.0): (Int, Long, Long) = {
-    import org.apache.spark.sql.expressions.Window
     require(factor > 1.0, s"merge factor must exceed 1 (got $factor): " +
       "at factor <= 1 every cell below the mean would retire, " +
       "including the balanced ones")
@@ -394,18 +354,10 @@ object IvfIndex {
       val survCents = spark.table(mT)
         .join(retiredSet, Seq("cell"), "left_anti")
       // reassign the cold members against SURVIVING centroids — the
-      // append rule verbatim, restricted to survivors
-      val wA = Window.partitionBy("vec_id")
-        .orderBy(col("cosc").desc, col("cell").asc)
-      val reassigned = cells.join(coldSet, Seq("cell"), "left_semi")
-        .select(col("vec_id"), col("v"), col("nrm"))
-        .crossJoin(broadcast(survCents))
-        .withColumn("cosc",
-          graft.functions.VectorFunctions.dot(col("v"), col("cv"))
-            / (col("nrm") * col("cn")))
-        .withColumn("rn", row_number().over(wA))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+      // append assignment, restricted to survivors
+      val reassigned = SimilarityQueries.assignCells(
+        cells.join(coldSet, Seq("cell"), "left_semi")
+          .select(col("vec_id"), col("v"), col("nrm")), survCents)
       val buckets = BandIndex.bucketsOf(spark, cT)
       val stagedCells = cells.join(coldSet, Seq("cell"), "left_anti")
         .unionByName(reassigned)
@@ -456,17 +408,7 @@ object IvfIndex {
     * the empty-cell retirement path, alongside [[mergeColdCells]].
     */
   def refreshCentroids(spark: SparkSession, tag: String): Unit = {
-    import org.apache.spark.sql.types.DecimalType
-    val cm = spark.table(cellsT(tag))
-      .select(col("cell"), posexplode(col("v")).as(Seq("pos0", "val")))
-      .groupBy(col("cell"), (col("pos0") + lit(1)).as("pos"))
-      .agg((sum(col("val").cast(DecimalType(30, 15))).cast("double") /
-        count(lit(1))).as("m"))
-    cm.groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("cv"))
-      .withColumn("cn",
-        sqrt(graft.functions.VectorFunctions.dot(col("cv"), col("cv"))))
+    Quantizer.means(spark.table(cellsT(tag)), Seq("cell"))
       .write.mode(SaveMode.Overwrite).saveAsTable(centT(tag))
     // drop any session-cached plan over the pre-refresh centroids (the
     // splitHotCells/refreshCounts convention — saveAsTable's implicit

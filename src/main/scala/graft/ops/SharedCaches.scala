@@ -70,8 +70,8 @@ object SharedCaches {
     * one materialization serves every reference in both queries. */
   val ContainGrams = "containment_grams"
 
-  /** ANN suite: normalized/bucketed embedding corpus + session-cached
-    * IVF parts (SimilarityQueries). */
+  /** ANN suite: the normalized/bucketed embedding corpus
+    * (SimilarityQueries). */
   val Embeddings = "embeddings"
 
   /** q_contamination_bloom's eval-set n-gram relation (sized, hashed

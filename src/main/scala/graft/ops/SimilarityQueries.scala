@@ -264,17 +264,9 @@ object SimilarityQueries {
   private[ops] def buildPqCodebook(n: DataFrame,
                                    k: Int = PqK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val s = n.sparkSession
-    // k-row window: the single-partition WindowExec is on a LIMIT-k
-    // relation, not the corpus
-    val seeds = n.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(k)
-      .withColumn("code", row_number().over(Window.orderBy(
-        md5(col("vec_id").cast("string")), col("vec_id"))))
-      .select(col("code"), col("v"))
-    val seedSub = seeds.crossJoin(pqSubs(s))
-      .select(col("sub"), col("code"), pqSliceSub("v").as("cv"))
+    val seedSub = Quantizer.seeds(n, k).crossJoin(pqSubs(s))
+      .select(col("sub"), col("sr").as("code"), pqSliceSub("v").as("cv"))
     val sv = n.crossJoin(pqSubs(s))
       .select(col("vec_id"), col("sub"), pqSliceSub("v").as("sv"))
     val wAsg = Window.partitionBy("vec_id", "sub")
@@ -283,15 +275,8 @@ object SimilarityQueries {
       .withColumn("d", pqD2(col("sv"), col("cv")))
       .withColumn("rn", row_number().over(wAsg)).filter(col("rn") === 1)
       .select(col("vec_id"), col("sub"), col("code"), col("sv"))
-    val cbm = a0
-      .select(col("sub"), col("code"),
-        posexplode(col("sv")).as(Seq("pos0", "val")))
-      .groupBy(col("sub"), col("code"), (col("pos0") + 1).as("pos"))
-      .agg((sum(col("val").cast(DecimalType(30, 15))).cast("double") /
-        count(lit(1))).as("m"))
-    cbm.groupBy("sub", "code")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("cv"))
+    Quantizer.means(a0, Seq("sub", "code"), "sv")
+      .select(col("sub"), col("code"), col("cv"))
   }
 
   /** Encode a normalized corpus against codebook `cb`: one row per
@@ -770,76 +755,35 @@ object SimilarityQueries {
       .filter(col("rank") <= K)
   }
 
-  /** IVF index build: deterministic seed centroids (the NCells vectors
-    * with smallest md5(vec_id) — a hash-order sample, scale-independent
-    * and reproducible in the oracle), one Lloyd refinement round
-    * (element-wise mean per cell), then cell assignment of the full
-    * corpus against the refined centroids. Returns (corpusWithCell,
-    * refinedCentroids).
-    *
-    * Scale shape: centroids are a 16-row relation the optimizer
-    * broadcasts, so both assignment passes are broadcast joins — the
-    * corpus never shuffles to be scored. The argmin windows partition by
-    * vec_id over exactly NCells co-located candidate rows, which
-    * WindowGroupLimit prunes to 1 row per vector BEFORE the exchange —
-    * the assignment shuffle is corpus-width, not NCells x corpus. The
-    * Lloyd mean is posexplode (x Dim) -> partial-agg -> one shuffle of
-    * NCells x Dim groups; means are exact DECIMAL sums divided once in
-    * IEEE double (order-independent, per the Registry determinism
-    * contract), so the refined centroids are bit-identical to the
-    * oracle's regardless of partitioning.
+  /** IVF centroids (cell, cv, cn): the [[Quantizer]] seed centroids
+    * (the `nCells` vectors first in md5(vec_id) order), every vector
+    * assigned to its nearest seed, then one round of exact Lloyd means
+    * — the k-means round-1 centroids (q_kmeans_refine). Centroid-side
+    * relations are `nCells` rows and broadcast into both scoring passes,
+    * so the corpus is never shuffled to be scored; the mean is one
+    * posexplode partial-agg and a shuffle of `nCells` x Dim groups.
+    */
+  private[ops] def ivfCentroids(n: DataFrame, nCells: Int): DataFrame =
+    Quantizer.means(
+      Quantizer.nearest(n, Quantizer.seedCentroids(n, nCells), 1), Seq("cell"))
+
+  /** The IVF cell rows (vec_id, v, nrm, cell): each vector of `n` in its
+    * nearest cell of `centn` — the one assignment the build, [[IvfIndex]]
+    * append and merge use.
+    */
+  private[ops] def assignCells(n: DataFrame, centn: DataFrame): DataFrame =
+    Quantizer.nearest(n, centn, 1)
+      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
+
+  /** IVF index build: [[ivfCentroids]], then cell assignment of the
+    * full corpus against them. Returns (corpusWithCell, centroids); the
+    * stored face ([[IvfIndex]]) writes the same two relations.
     */
   private[ops] def buildIvf(n: DataFrame,
                             nCells: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
-    // Explicit broadcast() hints on every centroid-side relation: seeds
-    // comes from orderBy+limit and centn from an aggregation, so the
-    // planner has no usable size estimate for either and was picking
-    // shuffle joins (r4 plan: 12 shuffles, 0 broadcast joins) for what
-    // is an nCells-row relation. The hint makes both assignment passes
-    // broadcast nested-loop scoring passes — the corpus never shuffles
-    // to be scored, at any scale.
-    val seeds = n.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(nCells)
-      .select(col("vec_id").as("cell0"), col("v").as("cv0"))
-    val wA1 = Window.partitionBy("vec_id").orderBy(col("cos0").desc, col("cell0").asc)
-    val a1 = n.crossJoin(broadcast(seeds))
-      .withColumn("cos0",
-        dot(col("v"), col("cv0")) / (col("nrm") * sqrt(dot(col("cv0"), col("cv0")))))
-      .withColumn("rn", row_number().over(wA1))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("cell0").as("cell"))
-    val cm = a1
-      .select(col("cell"), posexplode(col("v")).as(Seq("pos0", "val")))
-      .groupBy(col("cell"), (col("pos0") + lit(1)).as("pos"))
-      .agg((sum(col("val").cast(DecimalType(30, 15))).cast("double") /
-        count(lit(1))).as("m"))
-    val centn = cm.groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("cv"))
-      .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-    val wA2 = Window.partitionBy("vec_id").orderBy(col("cosc").desc, col("cell").asc)
-    val a2 = n.crossJoin(broadcast(centn))
-      .withColumn("cosc", dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-      .withColumn("rn", row_number().over(wA2))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    (a2, centn)
+    val centn = ivfCentroids(n, nCells)
+    (assignCells(n, centn), centn)
   }
-
-  /** Session-cached IVF parts (the in-memory face; the STORED face is
-    * [[IvfIndex]], which materializes the same build as bucketed
-    * tables): persist both sides so every same-session consumer scores
-    * against one materialization instead of re-running seed/Lloyd/assign.
-    */
-  private[ops] def ivfParts(s: SparkSession, dir: String,
-                            nCells: Int = NCells): (DataFrame, DataFrame) =
-    SharedCaches.memo(SharedCaches.Embeddings, s"ivfParts/$nCells", s, dir) {
-      val (a2, centn) = buildIvf(corpus(s, dir).drop("bucket"), nCells)
-      (SharedCaches.persist(SharedCaches.Embeddings, a2),
-        SharedCaches.persist(SharedCaches.Embeddings, centn))
-    }
 
   /** The normalized corpus for index builders ([[IvfIndex]]). */
   private[ops] def normalizedCorpus(s: SparkSession, dir: String): DataFrame =
@@ -849,41 +793,23 @@ object SimilarityQueries {
     * column `rn`, rank 1 == the stored hard assignment — same score,
     * same cell-asc tiebreak), derived at read time from a stored cell
     * relation + its centroid table. One broadcast scoring pass over the
-    * rows of `vecs` — the same shape as the build's own reassignment
-    * pass, so a production pipeline can materialize it next to the hard
-    * assignment at no new plan shape; the rank<=k window is
-    * WindowGroupLimit-pruned before its exchange. SemDeDup's cross-cell
-    * miss trade is bought down with this: a boundary pair split between
-    * two home cells still meets in a shared 2nd-nearest cell
-    * (q_dedup_semantic_recall MEASURES the gain per derivation).
+    * rows of `vecs` — the same shape as the build's own assignment
+    * pass. SemDeDup's cross-cell miss trade is bought down with this:
+    * a boundary pair split between two home cells still meets in a
+    * shared 2nd-nearest cell (q_dedup_semantic_recall MEASURES the gain
+    * per derivation).
     */
   private[ops] def softAssign(vecs: DataFrame, centn: DataFrame,
-                              k: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cosc").desc, col("cell").asc)
-    vecs.select(col("vec_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(centn))
-      .withColumn("cosc", dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+                              k: Int = 2): DataFrame =
+    Quantizer.nearest(vecs.select(col("vec_id"), col("v"), col("nrm")),
+      centn, k)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"), col("rn"))
-  }
 
-  /** IVF top-k: each query probes its NProbe nearest refined cells; the
-    * candidate set is the union of those inverted lists; exact cosine
-    * re-rank keeps k. A corpus vector lives in exactly one cell and a
-    * query's probe cells are distinct, so no candidate dedup is needed.
-    */
-  private[ops] def ivfTopK(s: SparkSession, dir: String,
-                           nCells: Int = NCells,
-                           nProbe: Int = NProbe): DataFrame = {
-    val (a2, centn) = ivfParts(s, dir, nCells)
-    ivfTopKFrom(s, dir, a2, centn, nProbe)
-  }
-
-  /** IVF top-k against a provided index (session-cached [[ivfParts]] or
-    * the stored [[IvfIndex]] tables — same relations either way).
+  /** IVF top-k against the stored [[IvfIndex]] tables: each query probes
+    * its `nProbe` nearest cells; the candidate set is the union of
+    * those inverted lists; exact cosine re-rank keeps k. A corpus vector
+    * lives in exactly one cell and a query's probe cells are distinct,
+    * so no candidate dedup is needed.
     */
   private[ops] def ivfTopKFrom(s: SparkSession, dir: String,
                                a2: DataFrame, centn: DataFrame,
@@ -899,15 +825,9 @@ object SimilarityQueries {
     * IVF-PQ composition (q_ann_ivfpq) probe with the SAME definition.
     */
   private[ops] def probeCells(q: DataFrame, centn: DataFrame,
-                              nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wProbe = Window.partitionBy("query_id").orderBy(col("cosc").desc, col("cell").asc)
-    q.crossJoin(broadcast(centn))
-      .withColumn("cosc", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nProbe)
+                              nProbe: Int): DataFrame =
+    Quantizer.nearest(q, centn, nProbe, "query_id", "qv", "qn")
       .select(col("query_id"), col("qv"), col("qn"), col("cell"))
-  }
 
   /** IVF top-k for an ARBITRARY query relation (query_id, qv, qn) —
     * the one probe definition shared by the declared batch queries and
@@ -1038,25 +958,15 @@ object SimilarityQueries {
     s"""(SELECT GREATEST($NCells,
        |    CAST(floor(sqrt(count(*))) AS BIGINT)) FROM n)""".stripMargin
 
-  /** (label, v) corpus -> (label, cv, n) centroid rows: decimal-exact
-    * per-dimension means (order-independent under any partitioning —
-    * the oracle's sum(CAST(.. DECIMAL(30,15))) twin) assembled into a
-    * per-label centroid vector plus the label count. ONE definition
+  /** (label, v) corpus -> (label, cv, cn, n) centroid rows: the
+    * [[Quantizer.means]] per label (the oracle's sum(CAST(.. DECIMAL(30,15)))
+    * twin) plus the label count. ONE definition
     * shared by the drift matrix and the prototypicality ranking so the
     * two consumers' centroids cannot drift.
     */
-  private[ops] def labelCentroids(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val cm = e.select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy("label", "i")
-      .agg((sum(col("x").cast(DecimalType(30, 15))).cast("double") /
-        count(lit(1))).as("m"))
-    val c = cm.groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        x => x.getField("m")).as("cv"))
-    val n = e.groupBy("label").agg(count(lit(1)).as("n"))
-    c.join(n, "label")
-  }
+  private[ops] def labelCentroids(e: DataFrame): DataFrame =
+    Quantizer.means(e, Seq("label"))
+      .join(e.groupBy("label").agg(count(lit(1)).as("n")), "label")
 
   /** Oracle twin of [[labelCentroids]]: CTEs `e` (label, v), `cm`
     * (per-dim decimal-exact means), `c` (label, cv), `cnt` (label, n)
@@ -1146,7 +1056,7 @@ object SimilarityQueries {
        |      c.cell ASC) AS rn
        |  FROM $src s, ${p}centn c) WHERE rn <= $k)""".stripMargin
 
-  /** CTE chain ending in `ivf_scored` — the oracle twin of [[ivfTopK]]:
+  /** CTE chain ending in `ivf_scored` — the oracle twin of [[ivfTopKFrom]]:
     * same hash-ordered seeds, same decimal-exact Lloyd means, same
     * probe/re-rank tiebreaks, so results are bit-comparable.
     */
@@ -2541,47 +2451,18 @@ object SimilarityQueries {
         "round bit-comparably; per-vector cosines rounded 9dp and " +
         "DECIMAL-summed for the order-independent mean. Scale shape " +
         "per round: centroids broadcast (the corpus is scored without " +
-        "shuffling, argmax window WindowGroupLimit-pruned), means are " +
+        "shuffling, the argmax partial-aggregates map-side), means are " +
         "one posexplode agg -> cells x dim groups; rounds are driver-" +
         "sequenced with localCheckpoint linear lineage (the " +
         "star-contraction pattern), so cost is rounds x one-pass — at " +
         "100 TB you run exactly as many rounds as the measured " +
         "mean_cos gain justifies.",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.types.DecimalType
         val n = normalizedCorpus(s, dir)
-        val seeds = n.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(NCells)
-          .select(col("vec_id").as("cell"), col("v").as("cv"))
-          .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-        // r18 (§2.3 aggregate-before-shuffle): the per-vector argmax was
-        // a row_number window — a full shuffle + sort of corpus×cells
-        // rows (GroupLimit-pruned but still sorted) PER ROUND. The
-        // max(struct(cosc, −cell, v)) aggregate is the repo's argmax
-        // template (identical pick: IEEE max on cosc, tie → min cell —
-        // cell unique per group so v is never compared) and partial-
-        // aggregates map-side, so each round shuffles one pre-reduced
-        // row per vector instead of sorting the scored cross join.
         def assign(cents: DataFrame): DataFrame =
-          n.crossJoin(broadcast(cents))
-            .withColumn("cosc",
-              dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-            .groupBy("vec_id")
-            .agg(max(struct(col("cosc").as("cosc"), (-col("cell")).as("nc"),
-              col("v").as("v"))).as("b"))
-            .select(col("vec_id"), col("b.v").as("v"),
-              (-col("b.nc")).as("cell"), col("b.cosc").as("cosc"))
-        def means(a: DataFrame): DataFrame =
-          a.select(col("cell"), posexplode(col("v")).as(Seq("pos0", "val")))
-            .groupBy(col("cell"), (col("pos0") + lit(1)).as("pos"))
-            .agg((sum(col("val").cast(DecimalType(30, 15))).cast("double") /
-              count(lit(1))).as("m"))
-            .groupBy("cell")
-            .agg(transform(
-              array_sort(collect_list(struct(col("pos"), col("m")))),
-              x => x.getField("m")).as("cv"))
-            .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
+          Quantizer.nearest(n, cents, 1)
+            .select(col("vec_id"), col("v"), col("cell"), col("cosc"))
         def metricRow(a: DataFrame, r: Int): DataFrame =
           a.agg(countDistinct(col("cell")).as("cells_used"),
             (sum(round(col("cosc"), 9).cast(DecimalType(28, 10)))
@@ -2594,11 +2475,13 @@ object SimilarityQueries {
         // state's only storage: a persist() on top would double-store
         // the rows as a cache entry nothing unpersists (r9 verdict).
         val states = scala.collection.mutable.Buffer.empty[DataFrame]
-        var a = GraftSqlBridge.freshLocalCheckpoint(assign(seeds))
+        var a = GraftSqlBridge.freshLocalCheckpoint(
+          assign(Quantizer.seedCentroids(n, NCells)))
         states += a
         var rows = metricRow(a, 0)
         for (r <- 1 to KmRounds) {
-          val nx = GraftSqlBridge.freshLocalCheckpoint(assign(means(a)))
+          val nx = GraftSqlBridge.freshLocalCheckpoint(
+            assign(Quantizer.means(a, Seq("cell"))))
           states += nx
           rows = rows.union(metricRow(nx, r))
           a = nx
@@ -2698,9 +2581,7 @@ object SimilarityQueries {
         val e2 = Tables.t(s, dir, "embeddings")
           .select(col("vec_id"), col("label"),
             toDoubleVec(col("embedding")).as("v"))
-        val cc = labelCentroids(
-            e2.select(col("label"), col("v")))
-          .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
+        val cc = labelCentroids(e2.select(col("label"), col("v")))
         val w = Window.partitionBy("label")
           .orderBy(col("cos").asc, col("vec_id").asc)
         e2.join(broadcast(cc), "label")

@@ -21,7 +21,8 @@ class IvfIndexSpec extends SparkSpec {
     val tag = IvfIndex.tag(dir, 16)
     dropAll(tag)
     val (cells, cents) = IvfIndex.buildOrLoad(spark, dir, 16)
-    val (a2, centn) = SimilarityQueries.ivfParts(spark, dir, 16)
+    val (a2, centn) = SimilarityQueries.buildIvf(
+      SimilarityQueries.normalizedCorpus(spark, dir), 16)
     assert(cells.select("vec_id", "cell").except(
       a2.select("vec_id", "cell")).isEmpty &&
       a2.select("vec_id", "cell").except(
@@ -43,7 +44,8 @@ class IvfIndexSpec extends SparkSpec {
     // buildOrLoad keys tables on (dir, nCells); copy under a test tag
     // is unnecessary — read the derived spec directly
     assert(IvfIndex.buckets(spark, IvfIndex.tag(dir, 16)) == 16)
-    val (a2, _) = SimilarityQueries.ivfParts(spark, dir, 16)
+    val (a2, _) = SimilarityQueries.buildIvf(
+      SimilarityQueries.normalizedCorpus(spark, dir), 16)
     assert(cellsD.select("vec_id", "cell").except(
       a2.select("vec_id", "cell")).isEmpty,
       "bucketing is layout, not semantics")

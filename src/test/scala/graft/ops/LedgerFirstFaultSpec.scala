@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
   * in `append`: the first insert, which runs after the ledger record,
   * fails. The ledger then holds the batch's keys, and `relevel` leaves
   * the stored level (bsz / df) equal to a fresh build over the rows the
-  * store actually holds — the standing docs.
+  * store actually holds — the standing docs. A fault in the band index's
+  * SECOND insert drops the band table, so the next build self-heals.
   */
 class LedgerFirstFaultSpec extends SparkSpec {
   import spark.implicits._
@@ -81,5 +82,41 @@ class LedgerFirstFaultSpec extends SparkSpec {
     assert(sorted(f.levelled(tag)) == sorted(f.levelled(fresh)))
     assert(spark.table(tables.last).count() == 0L,
       "relevel must reset the ledger")
+  }
+
+  /** Runs `f` with a write fault armed on `table`; returns what it threw. */
+  private def faultOn(table: String)(f: => Unit): Throwable = {
+    val protocolKey = "spark.sql.sources.commitProtocolClass"
+    val protocolBefore = spark.conf.getOption(protocolKey)
+    spark.conf.set(protocolKey, classOf[FailingCommitProtocol].getName)
+    FailingCommitProtocol.armed.set(table)
+    try intercept[Exception](f)
+    finally {
+      FailingCommitProtocol.armed.set("")
+      protocolBefore match {
+        case Some(v) => spark.conf.set(protocolKey, v)
+        case None => spark.conf.unset(protocolKey)
+      }
+    }
+  }
+
+  test("band index: a fault in append's band insert, after the shingle " +
+    "insert landed, drops the band table; buildOrLoad then rebuilds the " +
+    "bands a fresh build stores") {
+    val tag = "graft_test_lfault_" + System.nanoTime()
+    val fresh = tag + "_fresh"
+    val all = standing.union(batch)
+    BandIndex.buildOrLoad(spark, all, fresh)
+    BandIndex.buildOrLoad(spark, standing, tag)
+    val e = faultOn(s"${tag}_bands")(BandIndex.append(spark, batch, tag))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains(FailingCommitProtocol.Fault)), e.toString)
+    assert(!BandIndex.exists(spark, tag),
+      "a half-written index must not read as existing")
+    BandIndex.buildOrLoad(spark, all, tag)
+    for (t <- Seq("shingles", "bands"))
+      assert(sorted(spark.table(s"${tag}_$t")) ==
+        sorted(spark.table(s"${fresh}_$t")), t)
   }
 }

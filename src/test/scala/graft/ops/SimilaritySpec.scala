@@ -35,7 +35,8 @@ class SimilaritySpec extends SparkSpec {
     val dir01 = "/root/testdata/sf0.01"
     val exact = SimilarityQueries.exactTopK(spark, dir01)
       .select(col("query_id"), col("vec_id"))
-    val ivf = SimilarityQueries.ivfTopK(spark, dir01, nCells = 64, nProbe = 8)
+    val (cells, cents) = IvfIndex.buildOrLoad(spark, dir01, 64)
+    val ivf = SimilarityQueries.ivfTopKFrom(spark, dir01, cells, cents, 8)
       .select(col("query_id"), col("vec_id"))
     val nExact = exact.count().toDouble
     val hits = exact.join(ivf, Seq("query_id", "vec_id")).count().toDouble
